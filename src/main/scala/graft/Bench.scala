@@ -2,72 +2,68 @@ package graft
 import graft.plans.QueryMetrics
 import org.apache.spark.sql.SparkSession
 object Bench {
+  /** The engine session, warmed: one untimed query absorbs JVM/codegen JIT
+    * and file-index setup so the timings measure the queries, not
+    * first-query initialization. */
+  def warmSession(): SparkSession = {
+    val spark = EngineSession.create()
+    try SparkEntry.entry(spark).count() catch { case _: Throwable => () }
+    spark
+  }
+
+  /** One query's board number: (median seconds, the median run's metrics,
+    * Notify POSTs in the median run).
+    *
+    * One untimed warmup PER QUERY, then median-of-3: per-query codegen/JIT
+    * (each query compiles its own generated classes on first run) must land
+    * before the timed runs, or a heavy query's first-run compile shows up as
+    * a phantom multiple of its steady-state cost. Median (not min) of three
+    * timed runs so a single GC pause or scheduler hiccup in either direction
+    * can't swing a query 3-4x between rounds — round-over-round comparisons
+    * need a statistic that is stable when the code didn't change.
+    *
+    * Isolation + attribution: the cache is cleared BEFORE the query so a
+    * previous query's persisted/cached state can't speed up or
+    * evict-slow-down this one — a query's number must be a function of
+    * that query's code alone. And every timed run is metered (inputBytes /
+    * shuffle / spill via the QueryMetrics job-group listener), so any
+    * round-over-round move is attributable to a measured cause instead of
+    * inferred. */
+  def measure(spark: SparkSession, sfDir: String,
+              name: String): (Double, QueryMetrics.Metrics, Long) = {
+    val fn = SparkEntry.queries(name)
+    // nothing cached by a previous query survives — and every module's
+    // memoized tables are dropped WITH their cache registration, so a
+    // query that needs them rebuilds and re-caches its own copy (clearing
+    // only the catalog cache would leave live references computing
+    // uncached: the q25/q78 100x trap). The registry makes this
+    // structural: a new memoizing module registers itself and is reset
+    // here without Bench naming it.
+    MemoRegistry.resetAll()
+    spark.catalog.clearCache()
+    def once(): (Double, QueryMetrics.Metrics, Long) = {
+      // protocol work metric (q81-style delivery executors): POSTs
+      // executed during this run, from Notify's accumulator — zero for
+      // every non-protocol query, emitted only when nonzero
+      val p0 = graft.sinks.Notify.postAttempts
+      val t0 = System.nanoTime()
+      val m = try QueryMetrics.measureAction(spark)(fn(spark, sfDir).count())._2
+        catch { case e: Throwable =>
+          System.err.println(s"[bench] $name failed: ${e.getMessage}")
+          QueryMetrics.Metrics(0, 0, 0, 0, 0, 0, 0, 0)
+        }
+      ((System.nanoTime() - t0) / 1e9, m, graft.sinks.Notify.postAttempts - p0)
+    }
+    once() // untimed per-query warmup
+    Seq(once(), once(), once()).sortBy(_._1).apply(1)
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      // Codegen class cache sized to a QUERY's working set (r14b,
-      // measured): the 100-entry default thrashes under the multi-round
-      // store lifecycles (>100 distinct codegen units per run), so every
-      // run — warmup included — re-pays 0.2-0.9 s Janino compiles per
-      // stage with all tasks herd-blocked on the loading cache (q213
-      // ingest 5.2 s -> 1.7 s at any size >= 512). The per-query warmup's
-      // whole documented purpose is that codegen lands BEFORE the timed
-      // runs; this makes the cache actually hold it. Scale-neutral (the
-      // same thrash recurs per executor JVM on a cluster) and bounded
-      // (~generated-class metadata only); env-overridable for A/B.
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("GRAFT_CODEGEN_CACHE", "4096"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // Untimed warmup: absorb JVM/codegen JIT and file-index setup so the
-    // timings measure the queries, not first-query initialization.
-    try SparkEntry.entry(spark).count() catch { case _: Throwable => () }
-    // One untimed warmup PER QUERY, then median-of-3: per-query codegen/JIT
-    // (each query compiles its own generated classes on first run) must land
-    // before the timed runs, or a heavy query's first-run compile shows up as
-    // a phantom multiple of its steady-state cost. Median (not min) of three
-    // timed runs so a single GC pause or scheduler hiccup in either direction
-    // can't swing a query 3-4x between rounds — round-over-round comparisons
-    // need a statistic that is stable when the code didn't change.
-    //
-    // Isolation + attribution (the round-5 verdict's ask): the cache is
-    // cleared BEFORE each query so query N's persisted/cached state can't
-    // speed up or evict-slow-down query N+1 — a query's number must be a
-    // function of that query's code alone. And every timed run is metered
-    // (inputBytes / shuffle / spill via the QueryMetrics job-group listener),
-    // with the metrics of the median run emitted next to its seconds, so any
-    // round-over-round move is attributable to a measured cause instead of
-    // inferred.
-    val zero = QueryMetrics.Metrics(0, 0, 0, 0, 0, 0, 0, 0)
-    val results = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
-      // nothing cached by a previous query survives — and every module's
-      // memoized tables are dropped WITH their cache registration, so a
-      // query that needs them rebuilds and re-caches its own copy (clearing
-      // only the catalog cache would leave live references computing
-      // uncached: the q25/q78 100x trap). The registry makes this
-      // structural: a new memoizing module registers itself and is reset
-      // here without Bench naming it.
-      MemoRegistry.resetAll()
-      spark.catalog.clearCache()
-      def once(): (Double, QueryMetrics.Metrics, Long) = {
-        // protocol work metric (q81-style delivery executors): POSTs
-        // executed during this run, from Notify's accumulator — zero for
-        // every non-protocol query, emitted only when nonzero
-        val p0 = graft.sinks.Notify.postAttempts
-        val t0 = System.nanoTime()
-        val m = try QueryMetrics.measureAction(spark)(fn(spark, sfDir).count())._2
-          catch { case _: Throwable => zero }
-        ((System.nanoTime() - t0) / 1e9, m, graft.sinks.Notify.postAttempts - p0)
-      }
-      once() // untimed per-query warmup
-      val (sec, metrics, posts) = Seq(once(), once(), once()).sortBy(_._1).apply(1)
+    val cpus = EngineSession.cpus
+    val spark = warmSession()
+    val results = SparkEntry.queries.keys.toSeq.sorted.map { name =>
+      val (sec, metrics, posts) = measure(spark, sfDir, name)
       (name, sec, metrics, posts)
     }
     // The harness keeps only the last ~2000 chars of output; a full-name
@@ -112,7 +108,7 @@ object Bench {
     }.mkString("{", ",", "}")
     val total = fmt(results.map(_._2).sum)
     val line =
-      s"""{"metric":"total","value":$total,"unit":"sec","qunit":"ms","qomitted":$omitted,"queries":$shortQs,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","qunit":"ms","qomitted":$omitted,"queries":$shortQs,"sf":"$sfDir","cpus":$cpus}"""
     // standing annotations that ride the artifact so a reader comparing
     // boards doesn't re-adjudicate known-benign patterns every round
     val notes = "{\"q72_backfill_pagination\":" +
@@ -184,7 +180,7 @@ object Bench {
       "this file\"}"
     java.nio.file.Files.write(
       java.nio.file.Paths.get("bench_detail.json"),
-      s"""{"metric":"total","value":$total,"unit":"sec","notes":$notes,"queries":$fullQs,"sf":"$sfDir"}\n"""
+      s"""{"metric":"total","value":$total,"unit":"sec","notes":$notes,"queries":$fullQs,"sf":"$sfDir","cpus":$cpus}\n"""
         .getBytes("UTF-8"))
     println(line)
     // Driver parse contract hardening (r13 verdict "What's wrong #1"): the

@@ -32,7 +32,7 @@ object BenchAnnScale {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val copies = sys.env.getOrElse("SPARK_GRAFT_SCALE_COPIES", "10").toInt
     val scaleDir = sys.env.getOrElse("SPARK_GRAFT_SCALE_DIR", "/tmp/graft_scale_ann")
-    val spark = ScaleCorpus.session()
+    val spark = EngineSession.create()
 
     val base = Tables.embeddings(spark, sfDir)
     // Key stride must clear every EXISTING id, not just the row count —

@@ -43,7 +43,7 @@ object BenchBackfillScale {
     val copies = sys.env.getOrElse("SPARK_GRAFT_SCALE_COPIES", "10").toInt
     val pagesPerCursor = 20
     val perPage = 25
-    val spark = ScaleCorpus.session()
+    val spark = EngineSession.create()
 
     val rounds = for {
       c <- Seq(baseCursors, baseCursors * copies)

@@ -19,7 +19,7 @@ import org.apache.spark.sql.SparkSession
 object BenchCcScale {
 
   def main(args: Array[String]): Unit = {
-    val spark: SparkSession = ScaleCorpus.session()
+    val spark: SparkSession = EngineSession.create()
     import spark.implicits._
 
     // label-prop cap: beyond this diameter only star contraction runs

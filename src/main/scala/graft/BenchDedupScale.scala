@@ -31,7 +31,7 @@ object BenchDedupScale {
       .map(_.split(",").map(_.trim).toSet)
     val reps = sys.env.getOrElse("SPARK_GRAFT_SCALE_REPS", "3").toInt
     val outFile = if (copies == 10) "BENCH_sf1.json" else s"BENCH_sf1_${copies}x.json"
-    val spark = ScaleCorpus.session()
+    val spark = EngineSession.create()
 
     val base = Tables.documents(spark, sfDir)
     val scaled = ScaleCorpus.scaledDocs(base, copies)

@@ -27,7 +27,7 @@ object BenchErScale {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val scaleDir = sys.env.getOrElse("SPARK_GRAFT_SCALE_DIR", "/tmp/graft_scale_er")
-    val spark = ScaleCorpus.session()
+    val spark = EngineSession.create()
     import ScaleCorpus.fmt
 
     val base = Tables.part(spark, sfDir)

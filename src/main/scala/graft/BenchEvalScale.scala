@@ -25,7 +25,7 @@ object BenchEvalScale {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val copies = sys.env.getOrElse("SPARK_GRAFT_SCALE_COPIES", "10").toInt
     val scaleDir = sys.env.getOrElse("SPARK_GRAFT_SCALE_DIR", "/tmp/graft_scale_eval")
-    val spark = ScaleCorpus.session()
+    val spark = EngineSession.create()
 
     // SPARK_GRAFT_SCALE_QUERIES narrows the set (comma-separated names)
     // for deep-scale runs where the full family would be hours

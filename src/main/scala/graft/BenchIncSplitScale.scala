@@ -41,7 +41,7 @@ object BenchIncSplitScale {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val copies = sys.env.getOrElse("SPARK_GRAFT_SCALE_COPIES", "10").toInt
     val scaleDir = sys.env.getOrElse("SPARK_GRAFT_SCALE_DIR", "/tmp/graft_scale_incsplit")
-    val spark = ScaleCorpus.session()
+    val spark = EngineSession.create()
     import ScaleCorpus.fmt
 
     val base = Tables.documents(spark, sfDir)

@@ -29,7 +29,7 @@ object BenchIncrementalScale {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val copies = sys.env.getOrElse("SPARK_GRAFT_SCALE_COPIES", "10").toInt
     val workDir = sys.env.getOrElse("SPARK_GRAFT_SCALE_DIR", "/tmp/graft_scale_inc")
-    val spark = ScaleCorpus.session()
+    val spark = EngineSession.create()
 
     val base = Tables.documents(spark, sfDir)
     // The delta: near-copies of 500 base docs, re-keyed past every scaled

@@ -30,7 +30,7 @@ object BenchInvIndexScale {
     val scaleDir = sys.env.getOrElse("SPARK_GRAFT_SCALE_DIR", "/tmp/graft_scale_invidx")
     val outFile =
       if (copies == 10) "BENCH_sf1_invidx.json" else s"BENCH_sf1_invidx_${copies}x.json"
-    val spark = ScaleCorpus.session()
+    val spark = EngineSession.create()
     import ScaleCorpus.fmt
 
     ScaleCorpus.scaledDocs(Tables.documents(spark, sfDir), copies)

@@ -26,7 +26,7 @@ object BenchLangidScale {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val scaleDir = sys.env.getOrElse("SPARK_GRAFT_SCALE_DIR", "/tmp/graft_scale_langid")
-    val spark = ScaleCorpus.session()
+    val spark = EngineSession.create()
 
     val rounds = Seq(5, 50).map { nLangs =>
       val dir = s"$scaleDir/${nLangs}langs"

@@ -31,7 +31,7 @@ object BenchLongdocScale {
     val ks: Seq[Int] = sys.env.get("SPARK_GRAFT_LONGDOC_KS")
       .map(_.split(",").map(_.trim.toInt).toSeq)
       .getOrElse(Seq(1, 8, 64))
-    val spark = ScaleCorpus.session()
+    val spark = EngineSession.create()
     val qs = Seq("q47_repetition_signals", "q166_repetition_linear")
 
     val rounds = ks.map { k =>

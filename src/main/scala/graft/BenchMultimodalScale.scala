@@ -35,7 +35,7 @@ object BenchMultimodalScale {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val copies = sys.env.getOrElse("SPARK_GRAFT_SCALE_COPIES", "10").toInt
     val scaleDir = sys.env.getOrElse("SPARK_GRAFT_SCALE_DIR", "/tmp/graft_scale_mm")
-    val spark = ScaleCorpus.session()
+    val spark = EngineSession.create()
 
     val qs: Seq[String] = sys.env.get("SPARK_GRAFT_SCALE_QUERIES")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)

@@ -1,43 +1,20 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
-/** Dev tool: Bench's exact methodology (same session conf, per-query
-  * untimed warmup, median-of-3 timed count()) restricted to the named
-  * queries — the optimize-loop harness, so a single query's number can be
-  * re-measured without the full 200+ sweep. Takes query names as args;
-  * prints one line per query. NOT a driver surface — the official board
-  * stays [[Bench]]. */
+/** Dev tool: [[Bench]]'s per-query measurement ([[Bench.measure]]: same
+  * session, isolation, untimed warmup, median-of-3 and metrics) restricted
+  * to the named queries — the optimize-loop harness, so a single query's
+  * number can be re-measured without the full 200+ sweep. Takes query
+  * names as args; prints one line per query. The official board stays
+  * [[Bench]]. */
 object BenchOne {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      // keep the dev harness's session identical to Bench's (see the
-      // codegen-cache note there)
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("GRAFT_CODEGEN_CACHE", "4096"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    try SparkEntry.entry(spark).count() catch { case _: Throwable => () }
+    val spark = Bench.warmSession()
     args.foreach { name =>
-      val fn = SparkEntry.queries(name)
-      MemoRegistry.resetAll()
-      spark.catalog.clearCache()
-      def once(): Double = {
-        val t0 = System.nanoTime()
-        try fn(spark, sfDir).count() catch { case e: Throwable =>
-          println(s"ERROR $name: ${e.getMessage.take(300)}") }
-        (System.nanoTime() - t0) / 1e9
-      }
-      once()
-      val runs = Seq(once(), once(), once()).sorted
-      println(f"BENCHONE $name%-40s median=${runs(1)}%7.3f s  (min=${runs(0)}%.3f max=${runs(2)}%.3f)")
+      val (sec, m, _) = Bench.measure(spark, sfDir, name)
+      println(f"BENCHONE $name%-40s median=$sec%7.3f s  input=${m.inputBytes}%d B " +
+        f"shuffleWrite=${m.shuffleWriteBytes}%d B " +
+        f"spill=${m.memorySpillBytes + m.diskSpillBytes}%d B")
     }
     spark.stop()
   }

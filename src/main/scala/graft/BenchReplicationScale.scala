@@ -45,7 +45,7 @@ object BenchReplicationScale {
     val scaleDir = sys.env.getOrElse("SPARK_GRAFT_SCALE_DIR", "/tmp/graft_scale_rep")
     val scales = sys.env.getOrElse("SPARK_GRAFT_SCALE_POINTS", "1,10,100")
       .split(",").map(_.trim.toInt).toSeq
-    val spark = ScaleCorpus.session()
+    val spark = EngineSession.create()
     import ScaleCorpus.fmt
 
     val spec = Replicators.stripeChargeV1

@@ -28,7 +28,7 @@ object BenchRetrievalScale {
     val reps = sys.env.getOrElse("SPARK_GRAFT_SCALE_REPS", "3").toInt
     val outFile =
       if (copies == 10) "BENCH_sf1_retrieval.json" else s"BENCH_sf1_retrieval_${copies}x.json"
-    val spark = ScaleCorpus.session()
+    val spark = EngineSession.create()
 
     ScaleCorpus.scaledDocs(Tables.documents(spark, sfDir), copies)
       .write.mode("overwrite").parquet(s"$scaleDir/documents.parquet")

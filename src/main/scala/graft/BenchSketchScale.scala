@@ -29,7 +29,7 @@ object BenchSketchScale {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val copies = sys.env.getOrElse("SPARK_GRAFT_SCALE_COPIES", "10").toInt
-    val spark = ScaleCorpus.session()
+    val spark = EngineSession.create()
 
     val base = Tables.documents(spark, sfDir)
     val delta = base.select(col("doc_id"), col("source"), col("text"))

@@ -51,7 +51,7 @@ object BenchStreamScale {
   def main(args: Array[String]): Unit = {
     val nBatches = sys.env.getOrElse("SPARK_GRAFT_STREAM_BATCHES", "16").toInt
     val perBatch = sys.env.getOrElse("SPARK_GRAFT_STREAM_DOCS", "2000").toInt
-    val spark = ScaleCorpus.session()
+    val spark = EngineSession.create()
 
     final case class Run(recs: Seq[Long], secs: Seq[Double], compactSec: Double,
                          storeRows: Long, liveDocs: Long)

@@ -25,7 +25,7 @@ object BenchSubstrProbeScale {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val copies = sys.env.getOrElse("SPARK_GRAFT_SCALE_COPIES", "100").toInt
     val scaleDir = sys.env.getOrElse("SPARK_GRAFT_SCALE_DIR", "/tmp/graft_scale_substrprobe")
-    val spark = ScaleCorpus.session()
+    val spark = EngineSession.create()
     import ScaleCorpus.fmt
     import spark.implicits._
 

@@ -118,7 +118,7 @@ object BpeApplyProbe {
   }
 
   def main(args: Array[String]): Unit = {
-    val spark = ScaleCorpus.session()
+    val spark = EngineSession.create()
     import spark.implicits._
 
     // deterministic synthetic corpus ------------------------------------

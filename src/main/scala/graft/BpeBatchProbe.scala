@@ -19,7 +19,7 @@ import graft.operators.BpeTrainer
 object BpeBatchProbe {
 
   def main(args: Array[String]): Unit = {
-    val spark = ScaleCorpus.session()
+    val spark = EngineSession.create()
     import spark.implicits._
 
     // BpeApplyProbe's deterministic corpus, verbatim

@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
 object BpeScaleProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = ScaleCorpus.session()
+    val spark = EngineSession.create()
     val docs = ScaleCorpus.scaledDocs(Tables.documents(spark, sfDir), 10)
       .select(col("doc_id"), col("text")).localCheckpoint(true)
     println(s"docs=${docs.count()}")

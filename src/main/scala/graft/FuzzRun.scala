@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Differential SQL fuzzer: generate seeded random queries in an
@@ -152,16 +151,7 @@ object FuzzRun {
     val count = if (args.length > 2) args(2).toInt else 200
     val seed = if (args.length > 3) args(3).toLong else 10L
     val mode = if (args.length > 4) args(4) else "mixed"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = EngineSession.create()
     tables.foreach(t => spark.read.parquet(s"$sfDir/${t.name}.parquet")
       .createOrReplaceTempView(t.name))
     new java.io.File(outDir).mkdirs()
@@ -177,13 +167,7 @@ object FuzzRun {
         System.err.println(s"[fuzz] $name failed: ${e.getMessage}\n$sql")
       }
     }
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"' => "\\\""; case '\\' => "\\\\"; case '\n' => "\\n"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString
-    } + "\""
-    val json = sqls.map { case (k, v) => s"${q(k)}: ${q(v)}" }
-      .mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), Verify.oracleJson(sqls))
     println(s"[fuzz] generated $count, executed ${count - failed}, failed $failed")
     spark.stop()
   }

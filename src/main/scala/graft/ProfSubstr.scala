@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 object ProfSubstr {
   def main(args: Array[String]): Unit = {
     val d = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = ScaleCorpus.session()
+    val spark = EngineSession.create()
     def timed(tag: String)(f: => Unit): Unit = {
       val t0 = System.nanoTime(); f
       println(f"PROF $tag%-28s ${(System.nanoTime() - t0) / 1e9}%.2f s")

@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
 object ProfTrace {
   def main(args: Array[String]): Unit = {
     val d = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = ScaleCorpus.session()
+    val spark = EngineSession.create()
     val starts = new java.util.concurrent.ConcurrentHashMap[Int, (Long, String)]()
     val jobOfStage = new java.util.concurrent.ConcurrentHashMap[Int, Int]()
     val taskMs = new java.util.concurrent.ConcurrentHashMap[Int, java.util.concurrent.atomic.AtomicLong]()

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Deterministic, content-derived corpus scaler shared by the scale-evidence
@@ -23,24 +23,6 @@ import org.apache.spark.sql.functions._
   * select query/seed vectors and copies are keyed `vec_id + j*n_base`).
   */
 object ScaleCorpus {
-
-  /** The one SparkSession config for every scale-evidence main — change the
-    * bench environment here, not per-main (three copies diverged once). */
-  def session(): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("GRAFT_CODEGEN_CACHE", "4096"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark
-  }
 
   /** Locale-stable 3-decimal formatting for the emitted JSON lines. */
   def fmt(v: Double): String =

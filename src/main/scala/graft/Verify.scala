@@ -1,29 +1,32 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import com.fasterxml.jackson.databind.ObjectMapper
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+/** Correctness dump: each SparkEntry.queries result → parquet, plus
+  * oracle_sql.json, for the DuckDB oracle compare (`tools/check.py`).
+  *
+  * Usage: `Verify <sfDir> <outDir> [query ...]`. With query names, only
+  * those are dumped and listed in oracle_sql.json (fast iteration on a
+  * few queries; `tools/check.py` then compares exactly those). */
 object Verify {
+
+  /** oracle_sql.json's text: one JSON object of name -> SQL, in name
+    * order. Jackson escapes every control character, so a tab or CR in
+    * an oracle's SQL cannot break a JSON reader. */
+  def oracleJson(sqls: Iterable[(String, String)]): String = {
+    val m = new java.util.LinkedHashMap[String, String]()
+    sqls.toSeq.sortBy(_._1).foreach { case (k, v) => m.put(k, v) }
+    new ObjectMapper().writeValueAsString(m)
+  }
+
   def main(args: Array[String]): Unit = {
-    val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    require(args.length >= 2, "usage: Verify <sfDir> <outDir> [query ...]")
+    val sfDir = args(0); val outDir = args(1); val names = args.drop(2).toSet
+    val unknown = names.filterNot(SparkEntry.queries.contains)
+    require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
+    def selected(name: String): Boolean = names.isEmpty || names(name)
+    val spark = EngineSession.create()
     new java.io.File(outDir).mkdirs()
-    // GRAFT_VERIFY_ONLY=q208_substring_dedup,q209_stride_chunking — builder-side
-    // filter for iterating on one query without the full 200+ sweep; the
-    // driver never sets it, so its runs stay complete.
-    val only = sys.env.get("GRAFT_VERIFY_ONLY")
-      .map(_.split(",").map(_.trim).toSet)
-    SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
+    SparkEntry.queries.filter { case (name, _) => selected(name) }
       .foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
@@ -31,21 +34,8 @@ object Verify {
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"),
+      oracleJson(SparkEntry.oracleSql.filter { case (name, _) => selected(name) }))
     spark.stop()
   }
 }

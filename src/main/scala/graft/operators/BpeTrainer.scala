@@ -54,23 +54,6 @@ object BpeTrainer {
     * same loop and just re-caches on this cadence. */
   private val CacheEvery = sys.env.getOrElse("GRAFT_BPE_CACHE_EVERY", "8").toInt
 
-  /** Unpersist the block-manager blocks behind an eager localCheckpoint.
-    * The ContextCleaner only reclaims them after a driver GC notices the
-    * dropped reference; a long merge loop (or repeated train() calls in one
-    * JVM) must free superseded checkpoints deterministically or the block
-    * manager fills with dead vocab snapshots. */
-  private def freeCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.analyzed match {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        // blocking so the blocks are gone before the next step's jobs
-        // allocate (non-blocking frees raced the following explode and
-        // showed up as multi-second GC variance); the "cannot be
-        // recomputed" WARN this triggers is the intended contract — a
-        // superseded snapshot is never recomputed
-        lr.rdd.unpersist(true)
-      case _ => ()
-    }
-
   /** Batched-pass merge selection: from the top rows of the pair table
     * (sorted by the serial order: cnt desc, l, r), the longest prefix that
     * provably matches the serial argmax sequence when applied as one pass:
@@ -285,7 +268,7 @@ object BpeTrainer {
             .groupBy(col("l"), col("r")).agg(sum(col("cnt")).as("cnt"))
             .filter(col("cnt") > 0)
             .localCheckpoint(true) // eager: materializes AND cuts lineage
-          freeCheckpoint(pcOld)
+          Pins.free(pcOld)
           if (sys.env.contains("GRAFT_BPE_DEBUG"))
             println(f"[bpe] steps=${step - batch.size}..${step - 1} argmax=${(tDbg1 - tDbg0) / 1e9}%.2f delta=${(System.nanoTime() - tDbg1) / 1e9}%.2f batch=${batch.size}")
           sinceCache += batch.size
@@ -293,13 +276,13 @@ object BpeTrainer {
             val wOld = wCkpt
             wCkpt = w.localCheckpoint(true)
             w = wCkpt
-            freeCheckpoint(wOld)
+            Pins.free(wOld)
             sinceCache = 0
           }
         }
       }
-    freeCheckpoint(pc)
-    freeCheckpoint(wCkpt)
+    Pins.free(pc)
+    Pins.free(wCkpt)
     lastPasses.set(passes)
     merges.toSeq
   }

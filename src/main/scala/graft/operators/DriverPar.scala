@@ -12,7 +12,8 @@ package graft.operators
   *
   * Both actions always complete before this returns (the caller's crash /
   * replay reasoning sees the same "both done or round failed" boundary as
-  * the serial form); the first failure rethrows after the join. Callers
+  * the serial form); `a`'s failure rethrows after the join, carrying
+  * `b`'s as a suppressed exception when both fail. Callers
   * are responsible for independence — nothing here arbitrates two actions
   * mutating one store. */
 private[operators] object DriverPar {
@@ -26,7 +27,11 @@ private[operators] object DriverPar {
     t.start()
     val ra =
       try a
-      catch { case e: Throwable => t.join(); throw e }
+      catch { case e: Throwable =>
+        t.join()
+        if (err.get != null && (err.get ne e)) e.addSuppressed(err.get)
+        throw e
+      }
     t.join()
     if (err.get != null) throw err.get
     (ra, res.get)

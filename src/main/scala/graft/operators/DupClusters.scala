@@ -55,7 +55,7 @@ object DupClusters {
       // the superseded round's blocks are dead the moment `next` is
       // materialized — free them now instead of accumulating one pinned
       // label frame per round in the block manager
-      freeCheckpoint(pinned)
+      Pins.free(pinned)
       pinned = next
       labels = next.drop("__changed")
       converged = changed == 0
@@ -179,7 +179,7 @@ object DupClusters {
       star = isStarForest(edges)
       // the superseded round's edge blocks are dead once the new round is
       // materialized by the check above — free, don't accumulate
-      freeCheckpoint(prev)
+      Pins.free(prev)
     }
     if (!star)
       throw new IllegalStateException(
@@ -252,17 +252,6 @@ object DupClusters {
     }
     parent.keys.toSeq.map(n => n -> find(n))
   }
-
-  /** Unpersist a localCheckpoint pin's blocks deterministically (the
-    * [[IncrementalSubstr]] freeCheckpoint discipline): the ContextCleaner
-    * only reclaims them after a driver GC notices the dropped reference,
-    * so an iterative contraction would otherwise hold every superseded
-    * round's frame until one. */
-  private def freeCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.analyzed match {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.unpersist(true)
-      case _ => ()
-    }
 
   /** Exact convergence predicate: a canonical, deduplicated edge set is a
     * star forest iff (a) no node appears both as a smaller endpoint (root)

@@ -86,19 +86,17 @@ object IncrementalDedup {
     * round). Both frames are candidate-sized (the operator's whole point),
     * so eager localCheckpoints cost one small job each and every leg reads
     * the cached blocks. LIFETIME: the returned frame depends on the pins,
-    * so they are parked in [[lastVerifyPins]] and freed at the NEXT
-    * verifyPairs call on this JVM (or a harness MemoRegistry reset) — the
-    * earliest point the previous call's frame is provably dead (the
-    * lastProbePin discipline of [[IncrementalSubstr]]). */
+    * so they are parked under `verify:<owner>` ([[Pins]]): `owner` names
+    * the calling root or stream dir, and the frame stays valid until the
+    * next verifyPairs with the same owner. */
   def verifyPairs(candidates: DataFrame, corpus: DataFrame,
-                  threshold: Double): DataFrame = {
-    freeVerifyPins()
+                  threshold: Double, owner: String): DataFrame = {
     val cand = candidates.localCheckpoint(true)
     val needed = cand.select(col("doc_a").as("doc_id"))
       .unionByName(cand.select(col("doc_b").as("doc_id"))).distinct()
     val sh = shingles(corpus.join(needed, Seq("doc_id"), "left_semi"))
       .localCheckpoint(true)
-    lastVerifyPins.set(Seq(cand, sh))
+    Pins.park(s"verify:$owner", cand, sh)
     cand
       .join(sh.select(col("doc_id").as("doc_a"), col("sh").as("sh_a")), Seq("doc_a"))
       .join(sh.select(col("doc_id").as("doc_b"), col("sh").as("sh_b")), Seq("doc_b"))
@@ -106,27 +104,6 @@ object IncrementalDedup {
       .filter(col("jaccard") >= threshold)
       .select(col("doc_a"), col("doc_b"), col("jaccard"))
   }
-
-  /** The last verify call's working pins (candidates + fetched shingles):
-    * freed at the next verifyPairs on this JVM or a MemoRegistry reset —
-    * consuming a verify result after a LATER verify on the same JVM is
-    * outside the call contract (every caller materializes the result
-    * before its next round). */
-  private val lastVerifyPins =
-    new java.util.concurrent.atomic.AtomicReference[Seq[DataFrame]](null)
-  private def freeVerifyPins(): Unit = {
-    val dfs = lastVerifyPins.getAndSet(null)
-    if (dfs != null) dfs.foreach(freeCheckpoint)
-  }
-  graft.MemoRegistry.register(() => freeVerifyPins())
-
-  /** Unpersist a localCheckpoint pin's blocks deterministically (the
-    * [[IncrementalSubstr]] freeCheckpoint discipline). */
-  private def freeCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.analyzed match {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.unpersist(true)
-      case _ => ()
-    }
 
   /** One ingest round: find the delta's verified near-dups (against the
     * store and within the delta), then fold the delta's signatures into the
@@ -155,8 +132,8 @@ object IncrementalDedup {
     val storeSigs = spark.read.parquet(storeDir)
     val deltaSigs = signatures(delta).cache()
     val pairs =
-      verifyPairs(candidatePairs(storeSigs, deltaSigs), corpus, threshold)
-        .orderBy(col("doc_a"), col("doc_b"))
+      verifyPairs(candidatePairs(storeSigs, deltaSigs), corpus, threshold,
+        storeDir).orderBy(col("doc_a"), col("doc_b"))
     // Materialize results BEFORE mutating the store: localCheckpoint pins
     // the rows so the fold below cannot leak into a lazy re-read.
     val out = pairs.localCheckpoint(eager = true)

@@ -134,7 +134,10 @@ object IncrementalSplit {
     * flat over a 2M-row index). Candidates are IDENTICAL either way
     * (same banding, [[graft.functions.Hashing]] is the single source of
     * truth — gated by `IncrementalSplitSpec` and, force-routed, by
-    * q201's oracle); verification stays exact. */
+    * q201's oracle); verification stays exact.
+    *
+    * Returns the round's new pairs, valid until the next ingest on the
+    * same root ([[Pins]]). */
   def ingest(spark: SparkSession, root: String, corpus: DataFrame,
              delta: DataFrame, threshold: Double = 0.5,
              maintainIndex: Boolean = false,
@@ -239,9 +242,11 @@ object IncrementalSplit {
     // append right below is the round's first action on it and
     // materializes (and truncates) the pin in the same job; every later
     // consumer (repEdges, endpoint rows) reads the cached blocks. One
-    // verify pass, no dedicated checkpoint job (r13-verdict item 1).
-    val newPairs = IncrementalDedup.verifyPairs(candidates, corpus, threshold)
+    // verify pass, no dedicated checkpoint job (r13-verdict item 1). The
+    // returned frame is this pin: parked until the root's next ingest.
+    val newPairs = IncrementalDedup.verifyPairs(candidates, corpus, threshold, root)
       .localCheckpoint(false)
+    Pins.park(s"ingest:$root", newPairs)
     prof("verify + pairs append")(
       newPairs.write.mode(SaveMode.Append).parquet(pairsDir(root)))
 
@@ -312,15 +317,7 @@ object IncrementalSplit {
           }
         }
       })
-    freeCheckpoint(deltaSigs)
+    Pins.free(deltaSigs)
     newPairs
   }
-
-  /** Unpersist a localCheckpoint pin's blocks deterministically (the
-    * [[IncrementalSubstr]] freeCheckpoint discipline). */
-  private def freeCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.analyzed match {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.unpersist(true)
-      case _ => ()
-    }
 }

@@ -486,9 +486,11 @@ object IncrementalSubstr {
     *     read (the BandIndex partition-pruning shape).
     *  3. Full semi-joined scan otherwise (dup-heavy or bulk probes past
     *     [[ScreenMaxChars]]) — narrow, the same shape as ingest's
-    *     transition leg. */
+    *     transition leg.
+    *
+    * The returned report stays valid until the root's next probe or
+    * ingest ([[Pins]]). */
   def probe(spark: SparkSession, root: String, probeDocs: DataFrame): DataFrame = {
-    freeLastProbePin()
     val docs = probeDocs.select(col("doc_id"), col("text"),
       length(col("text")).as("len"))
     val wProbe = windows(docs)
@@ -502,19 +504,17 @@ object IncrementalSubstr {
     // final covered-position join below is the one remaining re-explode:
     // it needs positions, which the counts deliberately drop. LIFETIME
     // (the r13-advice leak fix): the returned report depends on this pin,
-    // so probe itself cannot free it — instead it is parked in
-    // lastProbePin and freed at the NEXT probe/ingest on this JVM (or a
-    // harness MemoRegistry reset), the earliest point at which the
-    // previous probe's frame is provably dead. Block-manager state is
-    // therefore bounded by ONE probe's windows instead of accumulating
-    // across probes.
+    // so probe itself cannot free it — it is parked under `probe:<root>`
+    // ([[Pins]]) and freed by the root's NEXT probe or ingest. Block-manager
+    // state is therefore bounded by ONE probe's windows per root instead
+    // of accumulating across probes.
     // LAZY pin (r14b): the screen collect (admission probes) or the final
     // report action (bulk probes) is the first consumer and materializes
     // the pin in the same job — the eager variant paid a dedicated
     // checkpoint job per probe.
     val probeCounts = wProbe.groupBy("w").agg(count(lit(1)).as("n"))
       .localCheckpoint(false)
-    lastProbePin.set(probeCounts)
+    Pins.park(s"probe:$root", probeCounts)
     val ledger = readWins(spark, root)
     val nb = bucketsOf(spark, root)
     // tier 1 — DRIVER-SIDE bloom screen for admission-sized probes: the
@@ -587,20 +587,6 @@ object IncrementalSubstr {
     reportFor(docs, wProbe.join(dupW, Seq("w")).select(col("doc_id"), col("p")),
       broadcastPerDoc = admissionSized)
   }
-
-  /** The last probe's working pin (its per-window counts): the returned
-    * report depends on it, so it must outlive the caller's consumption —
-    * it is freed at the start of the NEXT probe/ingest or by a harness
-    * MemoRegistry reset (the r13-advice leak fix; consuming a probe's
-    * frame after a LATER probe/ingest on the same JVM is outside the
-    * read-only probe contract). */
-  private val lastProbePin =
-    new java.util.concurrent.atomic.AtomicReference[DataFrame](null)
-  private def freeLastProbePin(): Unit = {
-    val df = lastProbePin.getAndSet(null)
-    if (df != null) freeCheckpoint(df)
-  }
-  graft.MemoRegistry.register(() => freeLastProbePin())
 
   /** One ingest round. `corpus` must serve (doc_id, text) for every doc
     * the store has ingested (holder texts are fetched on demand for
@@ -723,19 +709,6 @@ object IncrementalSubstr {
     } else docRows.write.parquet(docsDir(root)))
   }
 
-  /** Unpersist the block-manager blocks behind an eager localCheckpoint
-    * (the BpeTrainer discipline): the ContextCleaner only reclaims them
-    * after a driver GC notices the dropped reference, so a multi-round
-    * ingest sequence — or an ingest followed by a probe — would otherwise
-    * run against a block manager full of dead round snapshots (a
-    * corpus-sized first ingest pins the whole delta's text). Blocking, so
-    * the blocks are gone before the next phase's jobs allocate. */
-  private def freeCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.analyzed match {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.unpersist(true)
-      case _ => ()
-    }
-
   private val profile = sys.env.contains("GRAFT_PROF_SUBSTR")
   private def prof[A](tag: String)(f: => A): A =
     if (!profile) f else {
@@ -748,7 +721,7 @@ object IncrementalSubstr {
                            corpus: DataFrame, delta: DataFrame,
                            maintainBloom: Boolean, buckets: Int,
                            route: String): Unit = {
-    freeLastProbePin()
+    Pins.park(s"probe:$root")
     val fs = new org.apache.hadoop.fs.Path(root)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val d0 = delta.select(col("doc_id"), col("text"),
@@ -789,7 +762,7 @@ object IncrementalSubstr {
     // an EMPTY delta (e.g. a caller filter matching no rows) is a
     // graceful no-op: every sum/bit_xor above is NULL over zero rows, so
     // reading them as Long would NPE — short-circuit before touching any
-    if (st.getLong(0) == 0L) { freeCheckpoint(cls); return }
+    if (st.getLong(0) == 0L) { Pins.free(cls); return }
     // a delta carrying one doc_id with TWO different texts is ambiguous
     // in the same way a changed re-ingest is — reject, don't pick
     if (st.getLong(0) != st.getLong(1)) {
@@ -809,7 +782,7 @@ object IncrementalSubstr {
         "doc_id, or rebuild the root.")
     }
     // replays (identical content) drop out; what remains is genuinely new
-    if (st.getLong(3) == 0L) { freeCheckpoint(cls); return }
+    if (st.getLong(3) == 0L) { Pins.free(cls); return }
     val fresh = cls.filter(col("__fp_cur").isNull)
       .select(col("doc_id"), col("text"), col("len"), col("fp"))
     // Window-explode parallelism (guide §2.5 input skew, the measured r14b
@@ -985,8 +958,8 @@ object IncrementalSubstr {
         }
       else rep.write.parquet(asgDir(root)))
       writeDocsLedger(spark, root, fresh)
-      freeCheckpoint(all)
-      freeCheckpoint(cls)
+      Pins.free(all)
+      Pins.free(cls)
       return
     }
 
@@ -1110,6 +1083,6 @@ object IncrementalSubstr {
     // the next round (or a probe right after) doesn't run against a
     // block manager full of this round's dead texts
     Seq(Some(cls), Some(scan1), Some(redo), wHold, Some(rep))
-      .flatten.foreach(freeCheckpoint)
+      .flatten.foreach(Pins.free)
   }
 }

@@ -214,14 +214,6 @@ object InvIndex {
     if (committed.isEmpty) lit(false)
     else col("ingest_batch").isin(committed: _*)
 
-  /** Unpersist an eager localCheckpoint's blocks deterministically (the
-    * [[IncrementalSubstr]] freeCheckpoint discipline). */
-  private def freeCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.analyzed match {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.unpersist(true)
-      case _ => ()
-    }
-
   /** Index `delta` (doc_id, text) as batch `batchId`. Idempotent per
     * batch id (redelivery replaces); insert-only across batches (a
     * doc_id committed under another batch rejects — re-index changed
@@ -274,7 +266,7 @@ object InvIndex {
       coalesce(sum(length(col("text"))), lit(0L)).as("bytes"),
       collect_set(dbucketOf(col("doc_id"), nbPre.getOrElse(1)))
         .as("dbuckets")).head())
-    if (st.getLong(0) == 0L) { freeCheckpoint(d0); return }
+    if (st.getLong(0) == 0L) { Pins.free(d0); return }
     if (st.getLong(0) != st.getLong(1))
       sys.error(s"InvIndex.ingest at $root: delta carries one doc_id with " +
         "multiple texts — ambiguous; collapse the delta before ingesting")
@@ -378,8 +370,8 @@ object InvIndex {
     val tot = prof("totals")(dl0
       .agg(coalesce(sum(col("dl")), lit(0L)).as("t"),
         count(lit(1)).as("n")).head())
-    freeCheckpoint(dl0)
-    freeCheckpoint(d0)
+    Pins.free(dl0)
+    Pins.free(d0)
     prof("meta write")(writeMetaRow(spark, root, batchId,
       tot.getLong(0), tot.getLong(1)))
   }
@@ -460,24 +452,20 @@ object InvIndex {
     *    ints collected) before the per-doc join.
     *
     * The query-sized df/idf frame broadcasts, exactly as in the batch
-    * leg. */
+    * leg. The returned frame stays valid until the root's next search
+    * ([[Pins]]). */
   def search(spark: SparkSession, root: String, terms: Seq[String],
              k: Int): DataFrame = {
-    freeLastSearchPin()
     val committed = committedBatches(spark, root)
     val nb = bucketsOf(spark, root)
-    val termBuckets = terms.map(bucketOfWordDriver(_, nb)).distinct
     // LAZY pin (r14b): the pruned query-term postings feed the df/idf
     // frame, the candidate-dbucket listing and the scoring join — three
     // AQE legs that otherwise each re-ran the pruned scan. The dbucket
     // collect right below is the first action and materializes the pin;
-    // parked in lastSearchPin (the lastProbePin lifetime discipline).
-    val qtf = readOr(spark, postDir(root), postSchema)
-      .filter(committedFilter(committed) &&
-        col("bucket").isin(termBuckets: _*) && col("word").isin(terms: _*))
-      .select(col("word"), col("doc_id"), col("tf"))
+    // the returned frame reads it, so it is parked under `search:<root>`.
+    val qtf = queryPostings(spark, root, terms, committed, nb)
       .localCheckpoint(false)
-    lastSearchPin.set(qtf)
+    Pins.park(s"search:$root", qtf)
     // corpus totals as DRIVER SCALARS: read through parquet-hadoop (no
     // Spark job, no broadcast build) when the committed-batch count is
     // small — one tiny summary row per batch — with a one-row Spark
@@ -518,6 +506,19 @@ object InvIndex {
       .limit(k)
   }
 
+  /** The committed postings of `terms`, read pruned: partition filters on
+    * the committed batches and the terms' buckets (at the root's width
+    * `nb`), and the word list pushed into the parquet scan. */
+  private[operators] def queryPostings(spark: SparkSession, root: String,
+                                       terms: Seq[String], committed: Seq[Long],
+                                       nb: Int): DataFrame = {
+    val termBuckets = terms.map(bucketOfWordDriver(_, nb)).distinct
+    readOr(spark, postDir(root), postSchema)
+      .filter(committedFilter(committed) &&
+        col("bucket").isin(termBuckets: _*) && col("word").isin(terms: _*))
+      .select(col("word"), col("doc_id"), col("tf"))
+  }
+
   /** Driver-side sum of the per-batch (t, n) meta rows — the search path's
     * totals without a Spark job. Bounded by batch count (each batch's
     * marker holds ONE summary row); None past the bound or on any
@@ -555,15 +556,4 @@ object InvIndex {
       Some((t, n))
     } catch { case _: Exception => None }
   }
-
-  /** The last search's pruned-postings pin (the lastProbePin lifetime
-    * discipline): the returned frame depends on it, so it is freed at the
-    * NEXT search on this JVM or a harness MemoRegistry reset. */
-  private val lastSearchPin =
-    new java.util.concurrent.atomic.AtomicReference[DataFrame](null)
-  private def freeLastSearchPin(): Unit = {
-    val df = lastSearchPin.getAndSet(null)
-    if (df != null) freeCheckpoint(df)
-  }
-  graft.MemoRegistry.register(() => freeLastSearchPin())
 }

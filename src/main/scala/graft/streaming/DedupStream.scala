@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.operators.{IncrementalDedup, KeyedStore, TableLock}
+import graft.operators.{IncrementalDedup, KeyedStore, Pins, TableLock}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -100,7 +100,7 @@ object DedupStream {
         .filter(col("ingest_batch") <= batchId)
         .join(needed, Seq("doc_id"), "left_semi"))
       .select(col("doc_id"), col("text"))
-    val pairs = IncrementalDedup.verifyPairs(cand, corpus, threshold)
+    val pairs = IncrementalDedup.verifyPairs(cand, corpus, threshold, storeDir)
       .localCheckpoint(true)
     BatchStore.writePartition(pairs, batchId, pairsDir)
     BatchStore.writePartition(deltaSigs, batchId, storeDir)
@@ -116,7 +116,8 @@ object DedupStream {
       BandIndexStream.maybeCompact(spark, d, storeDir)
     }
     deltaSigs.unpersist()
-    ()
+    // the batch's own pins are dead once its partitions are written
+    Seq(delta, cand, pairs).foreach(Pins.free)
   }
 
   /** Maintenance pass: collapse a batch-stamped doc_id-keyed table (the

@@ -69,13 +69,15 @@ class IncrementalDedupSpec extends SparkSpec {
     // batch reference: all verified pairs over the full corpus
     val sigs = IncrementalDedup.signatures(all)
     val batch = pairSet(IncrementalDedup.verifyPairs(
-      IncrementalDedup.candidatePairs(sigs.limit(0), sigs), all, 0.5))
+      IncrementalDedup.candidatePairs(sigs.limit(0), sigs), all, 0.5,
+      "IncrementalDedupSpec.batch"))
 
     IncrementalDedup.initStore(dir, docs(baseIds))
     val inc0 = pairSet(IncrementalDedup.verifyPairs(
       IncrementalDedup.candidatePairs(
         IncrementalDedup.signatures(docs(baseIds)).limit(0),
-        IncrementalDedup.signatures(docs(baseIds))), docs(baseIds), 0.5))
+        IncrementalDedup.signatures(docs(baseIds))), docs(baseIds), 0.5,
+      "IncrementalDedupSpec.base"))
     val inc1 = pairSet(IncrementalDedup.processDelta(spark, dir, docs(baseIds ++ d1Ids), docs(d1Ids)))
     val inc2 = pairSet(IncrementalDedup.processDelta(spark, dir, all, docs(d2Ids)))
     assert((inc0 ++ inc1 ++ inc2) === batch,
@@ -168,7 +170,7 @@ class IncrementalDedupSpec extends SparkSpec {
     val corpus = docs(Seq(10L, 11L)).unionByName(
       Seq((99L, null.asInstanceOf[String])).toDF("doc_id", "text"))
     // null text on a non-candidate doc must not break the verify
-    val out = IncrementalDedup.verifyPairs(cand, corpus, 0.5)
+    val out = IncrementalDedup.verifyPairs(cand, corpus, 0.5, "IncrementalDedupSpec.null")
     assert(pairSet(out) === Set((10L, 11L)))
   }
 }

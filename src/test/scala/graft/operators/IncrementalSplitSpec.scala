@@ -30,7 +30,8 @@ class IncrementalSplitSpec extends SparkSpec {
   private def batchReps(corpus: DataFrame): Map[Long, Long] = {
     val sigs = IncrementalDedup.signatures(corpus)
     val pairs = IncrementalDedup.verifyPairs(
-      IncrementalDedup.candidatePairs(sigs.limit(0), sigs), corpus, 0.5)
+      IncrementalDedup.candidatePairs(sigs.limit(0), sigs), corpus, 0.5,
+      "IncrementalSplitSpec.batchReps")
     val lab = DupClusters.assign(pairs.select(col("doc_a"), col("doc_b")))
     val labeled = lab.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     corpus.select("doc_id").collect()

@@ -4,6 +4,7 @@ import graft.{SparkSpec, Tables}
 import graft.plans.QueryMetrics
 import graft.queries.PipelineQueries
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.functions._
 
 /** The persisted inverted index must equal the batch legs bit-for-bit
@@ -71,6 +72,19 @@ class InvIndexSpec extends SparkSpec {
     // bound loosely at half
     assert(m.inputRecords < fullRecords / 2,
       s"search read ${m.inputRecords} of $fullRecords postings — pruning lost")
+  }
+
+  test("the query-term postings scan prunes partitions and pushes the word list") {
+    val r = root(); ingestThirds(r)
+    val plan = InvIndex.queryPostings(spark, r, Seq("join", "hash", "filter"),
+      InvIndex.committedBatches(spark, r), 64).queryExecution.executedPlan
+    val scan = plan.collectFirst { case s: FileSourceScanExec => s }
+      .getOrElse(fail(s"no parquet scan in\n$plan"))
+    val partitionFilters = scan.metadata("PartitionFilters")
+    assert(partitionFilters.contains("ingest_batch") &&
+      partitionFilters.contains("bucket"), partitionFilters)
+    assert(scan.metadata("PushedFilters").contains("In(word,"),
+      scan.metadata("PushedFilters"))
   }
 
   test("hot-word skew: salted writes split the hot bucket, results identical") {

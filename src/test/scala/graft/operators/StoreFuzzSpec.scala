@@ -147,7 +147,8 @@ class StoreFuzzSpec extends SparkSpec {
   private def batchReps(corpus: DataFrame): Map[Long, Long] = {
     val sigs = IncrementalDedup.signatures(corpus)
     val pairs = IncrementalDedup.verifyPairs(
-      IncrementalDedup.candidatePairs(sigs.limit(0), sigs), corpus, 0.5)
+      IncrementalDedup.candidatePairs(sigs.limit(0), sigs), corpus, 0.5,
+      "StoreFuzzSpec.batchReps")
     val lab = DupClusters.assign(pairs.select(col("doc_a"), col("doc_b")))
     val labeled = lab.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     corpus.select("doc_id").collect()
@@ -163,7 +164,8 @@ class StoreFuzzSpec extends SparkSpec {
   private def batchPairs(corpus: DataFrame): Set[(Long, Long)] = {
     val sigs = IncrementalDedup.signatures(corpus)
     pairSet(IncrementalDedup.verifyPairs(
-      IncrementalDedup.candidatePairs(sigs.limit(0), sigs), corpus, 0.5))
+      IncrementalDedup.candidatePairs(sigs.limit(0), sigs), corpus, 0.5,
+      "StoreFuzzSpec.batchPairs"))
   }
 
   for (seed <- Seq(505L, 606L)) {
