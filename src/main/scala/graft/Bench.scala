@@ -50,7 +50,7 @@ object Bench {
       val m = try QueryMetrics.measureAction(spark)(fn(spark, sfDir).count())._2
         catch { case e: Throwable =>
           System.err.println(s"[bench] $name failed: ${e.getMessage}")
-          QueryMetrics.Metrics(0, 0, 0, 0, 0, 0, 0, 0)
+          QueryMetrics.Metrics(0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0)
         }
       ((System.nanoTime() - t0) / 1e9, m, graft.sinks.Notify.postAttempts - p0)
     }
@@ -61,6 +61,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = EngineSession.cpus
+    val sha = Sidecars.gitSha.map("\"" + _ + "\"").getOrElse("null")
     val spark = warmSession()
     val results = SparkEntry.queries.keys.toSeq.sorted.map { name =>
       val (sec, metrics, posts) = measure(spark, sfDir, name)
@@ -101,6 +102,8 @@ object Bench {
         s""","shuffleWriteBytes":${m.shuffleWriteBytes}""" +
         s""","shuffleReadBytes":${m.shuffleReadBytes}""" +
         s""","spillBytes":${m.memorySpillBytes + m.diskSpillBytes}""" +
+        s""","jobs":${m.jobs},"stages":${m.stages},"tasks":${m.tasks}""" +
+        s""","taskTimeMs":${m.taskTimeMs},"cpuMs":${m.cpuMs},"gcMs":${m.gcMs}""" +
         // protocol work metric (Notify POSTs executed in the median run):
         // present only on queries that actually deliver, so a q81 wall
         // move is adjudicated by attempts, not argument
@@ -108,7 +111,7 @@ object Bench {
     }.mkString("{", ",", "}")
     val total = fmt(results.map(_._2).sum)
     val line =
-      s"""{"metric":"total","value":$total,"unit":"sec","qunit":"ms","qomitted":$omitted,"queries":$shortQs,"sf":"$sfDir","cpus":$cpus}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","qunit":"ms","qomitted":$omitted,"queries":$shortQs,"sf":"$sfDir","cpus":$cpus,"git_sha":$sha}"""
     // standing annotations that ride the artifact so a reader comparing
     // boards doesn't re-adjudicate known-benign patterns every round
     val notes = "{\"q72_backfill_pagination\":" +
@@ -180,7 +183,7 @@ object Bench {
       "this file\"}"
     java.nio.file.Files.write(
       java.nio.file.Paths.get("bench_detail.json"),
-      s"""{"metric":"total","value":$total,"unit":"sec","notes":$notes,"queries":$fullQs,"sf":"$sfDir","cpus":$cpus}\n"""
+      s"""{"metric":"total","value":$total,"unit":"sec","notes":$notes,"queries":$fullQs,"sf":"$sfDir","cpus":$cpus,"git_sha":$sha}\n"""
         .getBytes("UTF-8"))
     println(line)
     // Driver parse contract hardening (r13 verdict "What's wrong #1"): the
@@ -188,12 +191,14 @@ object Bench {
     // as null by the driver — sbt interleaves [error]-channel log noise
     // after it inside the captured window. Make the line reachable two
     // more ways, without touching the timing or the line itself:
-    //  - write it VERBATIM to a top-level BENCH_LINE.json beside
-    //    bench_detail.json (a file survives any log interleaving);
+    //  - write it VERBATIM to a top-level BENCH_LINE_c<cpus>.json beside
+    //    bench_detail.json (a file survives any log interleaving; one
+    //    file per core count, so an 8-core run cannot overwrite the
+    //    32-core board);
     //  - re-print it as the absolute last stdout line after spark.stop(),
     //    when no executor/log thread can write over it.
     java.nio.file.Files.write(
-      java.nio.file.Paths.get("BENCH_LINE.json"),
+      java.nio.file.Paths.get(s"BENCH_LINE_c$cpus.json"),
       (line + "\n").getBytes("UTF-8"))
     spark.stop()
     println(line)

@@ -88,15 +88,19 @@ object IncrementalDedup {
     * the cached blocks. LIFETIME: the returned frame depends on the pins,
     * so they are parked under `verify:<owner>` ([[Pins]]): `owner` names
     * the calling root or stream dir, and the frame stays valid until the
-    * next verifyPairs with the same owner. */
+    * next verifyPairs with the same owner. A candidate frame the caller
+    * already pinned is read as it is: the caller owns that pin, and
+    * copying it would cost one more job per call. */
   def verifyPairs(candidates: DataFrame, corpus: DataFrame,
                   threshold: Double, owner: String): DataFrame = {
-    val cand = candidates.localCheckpoint(true)
+    val callerPinned = Pins.isPinned(candidates)
+    val cand = if (callerPinned) candidates else candidates.localCheckpoint(true)
     val needed = cand.select(col("doc_a").as("doc_id"))
       .unionByName(cand.select(col("doc_b").as("doc_id"))).distinct()
     val sh = shingles(corpus.join(needed, Seq("doc_id"), "left_semi"))
       .localCheckpoint(true)
-    Pins.park(s"verify:$owner", cand, sh)
+    if (callerPinned) Pins.park(s"verify:$owner", sh)
+    else Pins.park(s"verify:$owner", cand, sh)
     cand
       .join(sh.select(col("doc_id").as("doc_a"), col("sh").as("sh_a")), Seq("doc_a"))
       .join(sh.select(col("doc_id").as("doc_b"), col("sh").as("sh_b")), Seq("doc_b"))
@@ -125,7 +129,10 @@ object IncrementalDedup {
     *
     * `corpus` = every doc the store has signatures for, plus the delta
     * (the text source for on-demand shingle fetches); for re-ingested docs
-    * it must serve the NEW text. */
+    * it must serve the NEW text.
+    *
+    * LIFETIME: the returned pairs are a pin parked under `delta:<storeDir>`
+    * ([[Pins]]), valid until the next processDelta on the same store. */
   def processDelta(spark: SparkSession, storeDir: String, corpus: DataFrame,
                    delta: DataFrame, threshold: Double = 0.5): DataFrame = {
     recoverStore(spark, storeDir)
@@ -137,6 +144,7 @@ object IncrementalDedup {
     // Materialize results BEFORE mutating the store: localCheckpoint pins
     // the rows so the fold below cannot leak into a lazy re-read.
     val out = pairs.localCheckpoint(eager = true)
+    Pins.park(s"delta:$storeDir", out)
     KeyedStore.fold(spark, storeDir, deltaSigs, "doc_id")
     deltaSigs.unpersist()
     out

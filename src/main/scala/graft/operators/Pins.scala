@@ -33,6 +33,14 @@ object Pins {
     case _ => ()
   }
 
+  /** Whether `df` is already an eager localCheckpoint: its blocks are
+    * materialized, so pinning it again would only copy them in one more
+    * job. */
+  def isPinned(df: DataFrame): Boolean = df.queryExecution.analyzed match {
+    case lr: LogicalRDD => lr.rdd.isCheckpointed
+    case _ => false
+  }
+
   /** Free whatever `owner` held and hold `dfs` in its place (none: just
     * free). */
   def park(owner: String, dfs: DataFrame*): Unit = {

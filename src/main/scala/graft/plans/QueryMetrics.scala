@@ -1,6 +1,6 @@
 package graft.plans
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Execution metrics for one query run — the observability surface an
@@ -14,6 +14,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * jobs carrying that group id, and only task-ends from those stages are
   * summed — concurrent queries on the same SparkContext (other orgs, other
   * suites) do not contaminate the numbers.
+  *
+  * Besides the bytes, the same listener counts the run's layers: the jobs
+  * started, the stages completed (a stage skipped because its shuffle
+  * output was reused is not counted) and the tasks ended, with the tasks'
+  * summed run time, CPU time and GC time. Task time far above CPU time
+  * points at waiting (codegen compiles, locks, IO), not computing.
   */
 object QueryMetrics {
 
@@ -21,7 +27,9 @@ object QueryMetrics {
       inputBytes: Long, inputRecords: Long,
       shuffleWriteBytes: Long, shuffleReadBytes: Long,
       memorySpillBytes: Long, diskSpillBytes: Long,
-      resultRows: Long, wallMs: Long)
+      resultRows: Long, wallMs: Long,
+      jobs: Long, stages: Long, tasks: Long,
+      taskTimeMs: Long, cpuMs: Long, gcMs: Long)
 
   private val groupCounter = new java.util.concurrent.atomic.AtomicLong(0L)
 
@@ -46,11 +54,17 @@ object QueryMetrics {
     val myStages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
     var input = 0L; var records = 0L
     var sw = 0L; var sr = 0L; var memSpill = 0L; var diskSpill = 0L
+    var jobs = 0L; var stages = 0L; var tasks = 0L
+    var runMs = 0L; var cpuNs = 0L; var gcMs = 0L
     val listener = new SparkListener {
       override def onJobStart(j: SparkListenerJobStart): Unit =
         if (Option(j.properties)
-            .exists(_.getProperty("spark.jobGroup.id") == group))
+            .exists(_.getProperty("spark.jobGroup.id") == group)) synchronized {
+          jobs += 1
           j.stageIds.foreach(s => myStages.add(s))
+        }
+      override def onStageCompleted(s: SparkListenerStageCompleted): Unit =
+        if (myStages.contains(s.stageInfo.stageId)) synchronized { stages += 1 }
       override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
         val m = t.taskMetrics
         if (m != null && myStages.contains(t.stageId)) synchronized {
@@ -60,6 +74,10 @@ object QueryMetrics {
           sr += m.shuffleReadMetrics.totalBytesRead
           memSpill += m.memoryBytesSpilled
           diskSpill += m.diskBytesSpilled
+          tasks += 1
+          runMs += m.executorRunTime
+          cpuNs += m.executorCpuTime
+          gcMs += m.jvmGCTime
         }
       }
     }
@@ -71,8 +89,12 @@ object QueryMetrics {
       val result = try action finally sc.clearJobGroup()
       // listener events are posted asynchronously; drain before reading
       org.apache.spark.GraftListenerBridge.drainListeners(sc)
-      (result, Metrics(input, records, sw, sr, memSpill, diskSpill, 0L,
-        (System.nanoTime() - t0) / 1000000L))
+      val wallMs = (System.nanoTime() - t0) / 1000000L
+      val m = listener.synchronized {
+        Metrics(input, records, sw, sr, memSpill, diskSpill, 0L, wallMs,
+          jobs, stages, tasks, runMs, cpuNs / 1000000L, gcMs)
+      }
+      (result, m)
     } finally sc.removeSparkListener(listener)
   }
 
@@ -80,5 +102,7 @@ object QueryMetrics {
   def render(m: Metrics): String =
     f"rows=${m.resultRows} wall=${m.wallMs}ms read=${m.inputBytes}B/" +
       f"${m.inputRecords}rec shuffle=${m.shuffleWriteBytes}B/w+${m.shuffleReadBytes}B/r " +
-      f"spill=${m.memorySpillBytes}+${m.diskSpillBytes}B"
+      f"spill=${m.memorySpillBytes}+${m.diskSpillBytes}B " +
+      f"jobs=${m.jobs} stages=${m.stages} tasks=${m.tasks} " +
+      f"task=${m.taskTimeMs}ms cpu=${m.cpuMs}ms gc=${m.gcMs}ms"
 }

@@ -173,4 +173,24 @@ class IncrementalDedupSpec extends SparkSpec {
     val out = IncrementalDedup.verifyPairs(cand, corpus, 0.5, "IncrementalDedupSpec.null")
     assert(pairSet(out) === Set((10L, 11L)))
   }
+
+  test("verifyPairs reads a caller-pinned candidate set without pinning it again") {
+    // DedupStream.runBatch hands verifyPairs an eagerly pinned candidate
+    // set; copying it into a second pin was one wasted job per microbatch
+    val ids = Seq(10L, 11L, 12L, 20L, 21L, 40L, 41L, 47L)
+    val corpus = docs(ids)
+    val sigs = IncrementalDedup.signatures(corpus)
+    val cand = IncrementalDedup.candidatePairs(sigs.filter(col("doc_id") < 30L),
+      sigs.filter(col("doc_id") >= 12L)).localCheckpoint(true)
+    val owner = "IncrementalDedupSpec:pinned"
+    def run(c: DataFrame) = graft.plans.QueryMetrics.measureAction(spark)(
+      pairSet(IncrementalDedup.verifyPairs(c, corpus, 0.5, owner)))
+    val (copied, mCopied) = run(cand.select("*"))
+    val (reused, mReused) = run(cand)
+    assert(reused == copied && reused.contains((10L, 12L)))
+    assert(mCopied.jobs - mReused.jobs == 1,
+      s"copied: ${mCopied.jobs} jobs, reused: ${mReused.jobs} jobs")
+    Pins.park(s"verify:$owner")
+    assert(cand.count() > 0, "the caller's pin stays the caller's")
+  }
 }

@@ -36,4 +36,21 @@ class PinsSpec extends SparkSpec {
     MemoRegistry.resetAll()
     assert(level(a) == StorageLevel.NONE && level(b) == StorageLevel.NONE)
   }
+
+  test("processDelta's result is parked per store and freed by the next round") {
+    import spark.implicits._
+    val store = java.nio.file.Files.createTempDirectory("pinsdelta").toString + "/sigs"
+    val words = "the quick brown fox jumps over a lazy dog near the river bank today"
+    def docs(ids: Seq[Long]) = ids.map { i =>
+      (i, words.split(' ').map(w => s"${w}g${i / 10}").mkString(" ") + s" tail${i % 10}")
+    }.toDF("doc_id", "text")
+    IncrementalDedup.initStore(store, docs(Seq(10L, 20L)))
+    val first = IncrementalDedup.processDelta(spark, store, docs(Seq(10L, 11L, 20L)), docs(Seq(11L)))
+    assert(first.count() > 0 && level(first) != StorageLevel.NONE)
+    val second = IncrementalDedup.processDelta(spark, store,
+      docs(Seq(10L, 11L, 20L, 21L)), docs(Seq(21L)))
+    assert(level(first) == StorageLevel.NONE)
+    assert(second.count() > 0 && level(second) != StorageLevel.NONE)
+    Pins.park(s"delta:$store")
+  }
 }

@@ -39,4 +39,31 @@ class QueryMetricsSpec extends SparkSpec {
     assert(first.resultRows == 25 && first.inputRecords == 25)
     assert(second.resultRows == 5 && second.inputRecords == 5)
   }
+
+  private def twoStageAgg() = Tables.lineitem(spark, sfDir)
+    .repartition(8, col("l_returnflag"))
+    .groupBy("l_returnflag").agg(sum("l_quantity"))
+
+  test("a two-stage aggregate reports its jobs, stages, tasks and task time") {
+    val m = QueryMetrics.measure(twoStageAgg())
+    assert(m.jobs >= 1, QueryMetrics.render(m))
+    assert(m.stages >= 2 && m.tasks >= m.stages, QueryMetrics.render(m))
+    assert(m.taskTimeMs > 0 && m.cpuMs >= 0 && m.gcMs >= 0, QueryMetrics.render(m))
+  }
+
+  test("a query in another job group on another thread adds no layer counts") {
+    val alone = QueryMetrics.measure(twoStageAgg())
+    val stop = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val other = new Thread(() => {
+      spark.sparkContext.setJobGroup("QueryMetricsSpec-other", "noise")
+      while (!stop.get())
+        Tables.orders(spark, sfDir).repartition(8).groupBy("o_orderstatus").count().collect()
+    })
+    other.start()
+    val shared = try QueryMetrics.measure(twoStageAgg())
+      finally { stop.set(true); other.join(60000L) }
+    assert(!other.isAlive)
+    assert((shared.jobs, shared.stages, shared.tasks) == (alone.jobs, alone.stages, alone.tasks),
+      s"alone: ${QueryMetrics.render(alone)}; shared: ${QueryMetrics.render(shared)}")
+  }
 }
