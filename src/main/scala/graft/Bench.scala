@@ -50,7 +50,7 @@ object Bench {
       val m = try QueryMetrics.measureAction(spark)(fn(spark, sfDir).count())._2
         catch { case e: Throwable =>
           System.err.println(s"[bench] $name failed: ${e.getMessage}")
-          QueryMetrics.Metrics(0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0)
+          QueryMetrics.Metrics(0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0)
         }
       ((System.nanoTime() - t0) / 1e9, m, graft.sinks.Notify.postAttempts - p0)
     }

@@ -17,7 +17,9 @@ import org.apache.spark.sql.functions._
   *  - U3: set-once columns `coalesce(tgt.c, src.c)` (`base.rb:958-974`);
   *  - U4: in-batch duplicate keys collapse last-wins by ingest order
   *    (`backfiller.rb:58-114`) — required since a relational merge forbids
-  *    duplicate source keys;
+  *    duplicate source keys; a spec with a `versionCol` collapses to what
+  *    one-at-a-time application would keep instead, so the result does not
+  *    depend on where batch boundaries fall;
   *  - E20/skipNil: never overwrite an existing value with null
   *    (`column.rb:362-366`).
   *
@@ -31,13 +33,35 @@ final case class MergeSpec(
     /** ingest-order column; larger = later. Drives U4 last-wins dedup. */
     orderCol: String,
     /** U2 — may the matched source row overwrite the matched target row?
-      * Receives column resolvers for target and source. Default: always. */
-    updateWhere: (String => Column, String => Column) => Column =
-      (_, _) => lit(true),
+      * Receives column resolvers for target and source. Default: always.
+      * Derived from [[versionCol]] when that is set. */
+    updateWhere: (String => Column, String => Column) => Column = MergeSpec.Always,
     /** U3 — insert-only / set-once columns (e.g. row_created_at). */
     coalesceOnUpdate: Seq[String] = Nil,
     /** E20 — columns whose null in source must not clobber target. */
-    skipNilCols: Seq[String] = Nil)
+    skipNilCols: Seq[String] = Nil,
+    /** The event-time version column of a strictly monotonic merge. When
+      * set, the update condition is `t(v) < s(v)` and the in-batch dedup
+      * keeps the greatest `v` (ties: the earliest ingest, then the content
+      * hash) — exactly the row that applying the batch's deliveries one at
+      * a time in ingest order would leave, so a merge's result does not
+      * depend on where microbatch boundaries fall (prefix consistency,
+      * Structured Streaming, SIGMOD 2018). Versions are assumed non-null;
+      * set-once and skip-nil columns still resolve against the batch's
+      * winning row, not per delivery. */
+    versionCol: Option[String] = None) {
+  require(versionCol.isEmpty || (updateWhere eq MergeSpec.Always),
+    "versionCol derives the update condition t(v) < s(v); do not pass updateWhere too")
+
+  /** The effective U2 condition. */
+  def condition(t: String => Column, s: String => Column): Column =
+    versionCol.fold(updateWhere(t, s))(v => t(v) < s(v))
+}
+
+object MergeSpec {
+  /** The unconditional update (the default U2 condition). */
+  val Always: (String => Column, String => Column) => Column = (_, _) => lit(true)
+}
 
 object Merge {
 
@@ -56,7 +80,8 @@ object Merge {
 
   /** U4 — collapse duplicate keys within a batch, keeping the row with the
     * greatest `orderCol` (later-position wins is undefined in the reference
-    * hash-overwrite; we make it deterministic). Ties on `orderCol` break on
+    * hash-overwrite; we make it deterministic), or for a versioned spec the
+    * row [[MergeSpec.versionCol]] names. Remaining ties break on
     * a content hash of the WHOLE row: row_number over a NON-total order
     * would pick whichever duplicate the shuffle delivered first, and a
     * fetch-failure re-execution could deliver the other one — a retried
@@ -72,8 +97,13 @@ object Merge {
     val tiebreakCols = source.schema.fields.toSeq.sortBy(_.name).map { f =>
       if (containsMapType(f.dataType)) to_json(col(f.name)) else col(f.name)
     }
+    // a versioned spec keeps what a one-at-a-time fold keeps: the greatest
+    // version, the earliest delivery among equal versions (a strict t < s
+    // never lets a later equal version overwrite)
+    val order = spec.versionCol.fold(Seq(col(spec.orderCol).desc))(v =>
+      Seq(col(v).desc, col(spec.orderCol).asc))
     val w = Window.partitionBy(spec.keyCols.map(col): _*)
-      .orderBy(col(spec.orderCol).desc, xxhash64(tiebreakCols: _*).desc)
+      .orderBy(order :+ xxhash64(tiebreakCols: _*).desc: _*)
     source.withColumn("__rn", row_number().over(w))
       .filter(col("__rn") === 1).drop("__rn")
   }
@@ -105,7 +135,7 @@ object Merge {
     val sc: String => Column = c => col(s"s_$c")
     val inTarget = spec.keyCols.map(tc).map(_.isNotNull).reduce(_ || _)
     val inSource = spec.keyCols.map(sc).map(_.isNotNull).reduce(_ || _)
-    val doUpdate = spec.updateWhere(tc, sc)
+    val doUpdate = spec.condition(tc, sc)
 
     def resolved(c: String): Column = {
       val updated =

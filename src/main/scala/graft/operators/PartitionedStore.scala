@@ -1,8 +1,14 @@
 package graft.operators
 
 import graft.functions.Converters
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.hadoop.fs.{FileStatus, Path => HPath}
+import org.apache.spark.sql.{DataFrame, GraftColumnBridge, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, BoundReference, Expression, Predicate}
+import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation, LogicalRelation, PartitionDirectory}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, IntegerType, StructField, StructType}
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
 
@@ -25,13 +31,30 @@ import scala.jdk.CollectionConverters._
   * stores the same protocol maps to a conditional PUT of the next version.
   * Writer concurrency contract: single writer per table (the reference's
   * advisory-lock discipline); a version collision fails the late writer.
+  *
+  * Manifest format: `{"version":V,"buckets":{"<bucket>":<epoch>,...},
+  * "schema":<StructType json>}`. `schema` is the table's stored columns
+  * (everything but `part_bucket`), written inside the same atomic publish
+  * as the bucket map, so recording it opens no new crash window. Manifests
+  * written before it was recorded have no `schema`; their reads take it
+  * from one data file's footer instead.
+  *
+  * Every read — [[read]], [[readAt]], [[diff]], and the reads inside
+  * [[mergeInto]] and [[compact]] — is ONE parquet relation over a
+  * [[ManifestIndex]]: the requested buckets' files, each listed under the
+  * epoch that owns it, with `part_bucket` as the partition column (bucket
+  * filters prune at planning). Its plan has the same shape however many
+  * epochs are live, and it runs no schema-inference job.
   */
 object PartitionedStore {
 
   val BucketCol = "part_bucket"
   private val ManifestDir = "_manifest"
 
-  final case class Manifest(version: Long, buckets: Map[Int, Long]) {
+  /** `schema`: the stored columns, None in a manifest written before the
+    * schema was recorded. */
+  final case class Manifest(version: Long, buckets: Map[Int, Long],
+                            schema: Option[StructType]) {
     def epochDirs: Map[Long, Seq[Int]] =
       buckets.groupBy(_._2).map { case (e, bs) => e -> bs.keys.toSeq.sorted }
   }
@@ -41,17 +64,18 @@ object PartitionedStore {
   private def render(m: Manifest): String = {
     val bs = m.buckets.toSeq.sortBy(_._1)
       .map { case (b, e) => s""""$b":$e""" }.mkString(",")
-    s"""{"version":${m.version},"buckets":{$bs}}"""
+    val schema = m.schema.map(st => s""","schema":${st.json}""").getOrElse("")
+    s"""{"version":${m.version},"buckets":{$bs}$schema}"""
   }
 
   private def parse(s: String): Manifest = {
-    val version = """"version":(\d+)""".r.findFirstMatchIn(s)
-      .map(_.group(1).toLong)
-      .getOrElse(sys.error(s"bad manifest: $s"))
-    val buckets = """"(\d+)":(\d+)""".r.findAllMatchIn(
-      s.substring(s.indexOf("\"buckets\""))).map(m =>
-      m.group(1).toInt -> m.group(2).toLong).toMap
-    Manifest(version, buckets)
+    val node = new com.fasterxml.jackson.databind.ObjectMapper().readTree(s)
+    require(node != null && node.has("version") && node.has("buckets"), s"bad manifest: $s")
+    val buckets = node.get("buckets").fields().asScala
+      .map(e => e.getKey.toInt -> e.getValue.asLong).toMap
+    val schema = Option(node.get("schema"))
+      .map(n => DataType.fromJson(n.toString).asInstanceOf[StructType])
+    Manifest(node.get("version").asLong, buckets, schema)
   }
 
   private def manifestName(v: Long): String = f"v$v%012d.json"
@@ -96,6 +120,78 @@ object PartitionedStore {
         s.stripPrefix(s"$BucketCol=").toInt }
       .sorted
 
+  /** The stored columns of a frame about to be written: all but the layout
+    * column. */
+  private def storedSchema(df: DataFrame): StructType =
+    StructType(df.schema.filterNot(_.name == BucketCol))
+
+  // ------------------------------------------------------------ read path
+
+  private val partitionSchema = StructType(Seq(StructField(BucketCol, IntegerType)))
+
+  /** The file listing of one read: one partition per bucket, holding the
+    * data files of the epoch that owns the bucket in the manifest read.
+    * Listed once on the driver when the read is built (a manifest's epochs
+    * are immutable); [[listFiles]] prunes by the scan's bucket filters.
+    * Equal listings compare equal, so two reads of the same snapshot are
+    * the same relation to the plan cache. */
+  private[operators] final case class ManifestIndex(root: HPath, partitions: Seq[PartitionDirectory])
+      extends FileIndex {
+    override def rootPaths: Seq[HPath] = Seq(root)
+    override def partitionSchema: StructType = PartitionedStore.partitionSchema
+    override def listFiles(partitionFilters: Seq[Expression],
+                           dataFilters: Seq[Expression]): Seq[PartitionDirectory] =
+      partitionFilters.reduceOption(And) match {
+        case None => partitions
+        case Some(f) =>
+          // the only partition column is the bucket: bind every reference to it
+          val p = Predicate.createInterpreted(f.transform {
+            case _: AttributeReference => BoundReference(0, IntegerType, nullable = true)
+          })
+          p.initialize(0)
+          partitions.filter(d => p.eval(d.values))
+      }
+    override def inputFiles: Array[String] =
+      partitions.flatMap(_.files.map(_.getPath.toString)).toArray
+    override def refresh(): Unit = ()
+    override def sizeInBytes: Long = partitions.flatMap(_.files).map(_.getLen).sum
+  }
+
+  /** The one read path: `buckets` (those absent from `m` are skipped)
+    * as a single parquet relation over a [[ManifestIndex]]. No bucket
+    * gives an empty relation of the table's schema. */
+  private def readBuckets(spark: SparkSession, dir: String, m: Manifest,
+                          buckets: Seq[Int]): DataFrame = {
+    val root = new HPath(dir)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def dataFiles(e: Long, b: Int): Array[FileStatus] =
+      fs.listStatus(new HPath(root, s"e$e/$BucketCol=$b")).filter { st =>
+        val n = st.getPath.getName
+        st.isFile && !n.startsWith("_") && !n.startsWith(".")
+      }.sortBy(_.getPath.getName)
+    val parts = buckets.distinct.sorted.flatMap(b => m.buckets.get(b).map(e =>
+      PartitionDirectory(InternalRow(b), dataFiles(e, b))))
+    val schema = m.schema.getOrElse(footerSchema(spark, dir, m, parts))
+    val rel = HadoopFsRelation(ManifestIndex(fs.makeQualified(root), parts),
+      partitionSchema, GraftColumnBridge.asNullable(schema), None,
+      new ParquetFileFormat, Map.empty)(spark)
+    GraftColumnBridge.ofRows(spark, LogicalRelation(rel))
+  }
+
+  /** Stored columns of a manifest written before the schema was recorded:
+    * one data file's footer (a committed empty snapshot left one
+    * unpartitioned empty file under its own epoch). */
+  private def footerSchema(spark: SparkSession, dir: String, m: Manifest,
+                           parts: Seq[PartitionDirectory]): StructType = {
+    val file = parts.flatMap(_.files).headOption.map(_.getPath.toString).getOrElse {
+      val epochs = (m.buckets.values.toSeq :+ m.version).distinct.sorted.reverse
+      epochs.map(e => Paths.get(dir, s"e$e")).filter(Files.isDirectory(_))
+        .flatMap(listDir).find(_.toString.endsWith(".parquet"))
+        .map(_.toString).getOrElse(sys.error(s"no data file under $dir"))
+    }
+    StructType(spark.read.parquet(file).schema.filterNot(_.name == BucketCol))
+  }
+
   // ------------------------------------------------------------------ api
 
   def withBucket(df: DataFrame, keyCol: String, buckets: Int): DataFrame =
@@ -112,20 +208,14 @@ object PartitionedStore {
     val v = currentManifest(dir).map(_.version + 1).getOrElse(1L)
     val b = withBucket(df, keyCol, buckets)
     b.write.mode("overwrite").partitionBy(BucketCol).parquet(s"$dir/e$v")
+    // a snapshot of zero rows lands no bucket at all: the manifest's schema
+    // is what its reads answer with
     val landed = bucketsIn(Paths.get(dir, s"e$v"))
-    // Empty snapshot: a partitioned write of zero rows leaves no parquet
-    // files at all (schema lost). Land one unpartitioned empty file so
-    // read() of the committed-but-empty table still answers with the
-    // right schema instead of crashing.
-    if (landed.isEmpty)
-      b.limit(0).write.mode("overwrite").parquet(s"$dir/e$v")
-    publish(dir, Manifest(v, landed.map(_ -> v).toMap))
+    publish(dir, Manifest(v, landed.map(_ -> v).toMap, Some(storedSchema(b))))
   }
 
-  /** Read the committed snapshot: one pruned parquet scan per live epoch
-    * (each restricted to the buckets that epoch still owns), unioned. The
-    * union stays shallow because [[compact]] folds history; every scan keeps
-    * `part_bucket` as a partition column, so bucket filters still prune. */
+  /** Read the committed snapshot: one parquet relation over every bucket,
+    * each listed under the epoch that owns it (see the object doc). */
   def read(spark: SparkSession, dir: String): DataFrame =
     currentManifest(dir) match {
       case None => spark.read.parquet(dir) // pre-manifest flat layout
@@ -156,8 +246,7 @@ object PartitionedStore {
   }
 
   private def readManifest(spark: SparkSession, dir: String, m: Manifest): DataFrame =
-    if (m.buckets.isEmpty) spark.read.parquet(s"$dir/e${m.version}") // empty snapshot
-    else readBuckets(spark, dir, m, m.buckets.keys.toSeq.sorted)
+    readBuckets(spark, dir, m, m.buckets.keys.toSeq)
 
   /** Row-level diff between two committed versions: (keys..., change) with
     * change in {added, removed, changed} — the audit view time travel
@@ -180,13 +269,7 @@ object PartitionedStore {
       .filter(bkt => mFrom.buckets.get(bkt) != mTo.buckets.get(bkt))
       .toSeq.sorted
     def hashed(m: Manifest, tag: String): DataFrame = {
-      val full = readManifest(spark, dir, m)
-      // partition pruning on the layout column restricts each epoch scan to
-      // the changed buckets; the pre-pruned plan reads zero files for an
-      // untouched bucket
-      val df =
-        if (changed.isEmpty) full.where(lit(false))
-        else full.where(col(BucketCol).isin(changed.map(Int.box): _*))
+      val df = readBuckets(spark, dir, m, changed)
       // exclude the layout column: rebucketing (different bucket count)
       // must not read as data change
       val payload = df.columns
@@ -203,18 +286,6 @@ object PartitionedStore {
           .when(col("__h_from") =!= col("__h_to"), lit("changed")))
       .where(col("change").isNotNull)
       .select(keyCols.map(col) :+ col("change"): _*)
-  }
-
-  private def readBuckets(spark: SparkSession, dir: String, m: Manifest,
-                          buckets: Seq[Int]): DataFrame = {
-    val want = buckets.toSet
-    val perEpoch = m.epochDirs.toSeq.sortBy(_._1).flatMap { case (e, owned) =>
-      val keep = owned.filter(want)
-      if (keep.isEmpty) None
-      else Some(spark.read.option("basePath", s"$dir/e$e")
-        .parquet(keep.map(b => s"$dir/e$e/$BucketCol=$b"): _*))
-    }
-    perEpoch.reduceLeft(_ unionByName _)
   }
 
   /** Merge a batch into the snapshot, rewriting ONLY the buckets the batch
@@ -238,22 +309,19 @@ object PartitionedStore {
     val touched = bucketed.select(col(BucketCol)).distinct()
       .collect().map(_.getInt(0)).sorted
     if (touched.isEmpty) return
-    val existing = touched.filter(m.buckets.contains)
-    val current =
-      if (existing.isEmpty) bucketed.limit(0)
-      else readBuckets(spark, dir, m, existing.toSeq)
+    val current = readBuckets(spark, dir, m, touched.toSeq)
     val mergeSpec = spec.copy(keyCols = (BucketCol +: spec.keyCols).distinct)
     val merged = Merge.upsert(
       current.select(bucketed.columns.map(col): _*), bucketed, mergeSpec)
     val v = m.version + 1
     merged.write.mode("overwrite").partitionBy(BucketCol).parquet(s"$dir/e$v")
     val landed = bucketsIn(Paths.get(dir, s"e$v"))
-    publish(dir, Manifest(v, m.buckets ++ landed.map(_ -> v)))
+    publish(dir, Manifest(v, m.buckets ++ landed.map(_ -> v), Some(storedSchema(current))))
   }
 
-  /** Compact only when the live-epoch union depth crosses `maxEpochs` —
-    * the policy a per-microbatch merge cadence needs: merges stay O(batch)
-    * while read fan-out stays bounded, and the full rewrite amortizes over
+  /** Compact only when the live-epoch count crosses `maxEpochs` — the
+    * policy a per-microbatch merge cadence needs: merges stay O(batch)
+    * while the epoch directories a read lists stay bounded, and the full rewrite amortizes over
     * `maxEpochs` batches. Returns true when a compaction ran. */
   def maybeCompact(spark: SparkSession, dir: String, maxEpochs: Int = 8): Boolean =
     currentManifest(dir) match {
@@ -261,16 +329,17 @@ object PartitionedStore {
       case _ => false
     }
 
-  /** Fold all live epochs into one: a full rewrite that bounds the epoch
-    * union depth (run on the reference's retention cadence, not per batch).
+  /** Fold all live epochs into one: a full rewrite that bounds the live
+    * epoch count (run on the reference's retention cadence, not per batch).
     * Takes the [[TableLock]] — compaction is a writer. */
   def compact(spark: SparkSession, dir: String): Unit = TableLock.withLock(dir) {
     val m = currentManifest(dir).getOrElse(return)
     if (m.epochDirs.size <= 1) return
     val v = m.version + 1
-    read(spark, dir).write.mode("overwrite")
-      .partitionBy(BucketCol).parquet(s"$dir/e$v")
-    publish(dir, Manifest(v, bucketsIn(Paths.get(dir, s"e$v")).map(_ -> v).toMap))
+    val live = readManifest(spark, dir, m)
+    live.write.mode("overwrite").partitionBy(BucketCol).parquet(s"$dir/e$v")
+    publish(dir, Manifest(v, bucketsIn(Paths.get(dir, s"e$v")).map(_ -> v).toMap,
+      Some(storedSchema(live))))
   }
 
   /** Delete epoch directories no manifest-current bucket references —
@@ -308,7 +377,8 @@ object PartitionedStore {
     // 2. Live epochs = everything ANY retained manifest still references —
     //    readAt() must keep working for the whole retention window, not
     //    just the newest version. A version's own epoch stays live even
-    //    when it owns no buckets (the schema of a committed empty snapshot).
+    //    when it owns no buckets (an empty snapshot committed before the
+    //    manifest recorded the schema keeps its schema there).
     val live: Set[Long] = {
       val md = Paths.get(dir, ManifestDir)
       if (!Files.isDirectory(md)) Set.empty

@@ -62,6 +62,10 @@ object ColumnSpec {
   *                      `stripe_v1_mixin.rb:6-10`)
   * @param updateWhere   U2 event-time monotonicity; default "data changed"
   *                      (`base.rb:861-879`)
+  * @param versionCol    a strictly monotonic version column: the merge
+  *                      updates when `t(v) < s(v)` and dedups a batch to
+  *                      what one-at-a-time application would keep
+  *                      ([[MergeSpec.versionCol]]); replaces `updateWhere`
   */
 final case class ReplicatorSpec(
     name: String,
@@ -69,14 +73,17 @@ final case class ReplicatorSpec(
     columns: Seq[ColumnSpec],
     timestampCol: Option[String] = None,
     updateWhere: (String => Column, String => Column) => Column =
-      (t, s) => !(t("data") <=> s("data")),
+      ReplicatorSpec.DataChanged,
     eventPred: Column => Column = _ => lit(false),
     resourcePath: Seq[String] = Nil,
     partitioned: Boolean = false,
     /** store the fetched enrichment JSON alongside the row (the reference's
       * `enrichment jsonb` column, `base.rb:460-465`). */
     usesEnrichment: Boolean = false,
-    dependsOn: Option[String] = None) {
+    dependsOn: Option[String] = None,
+    versionCol: Option[String] = None) {
+  require(versionCol.isEmpty || (updateWhere eq ReplicatorSpec.DataChanged),
+    s"$name: versionCol derives the update condition; do not pass updateWhere too")
 
   /** Full output schema: declared columns + partition hash (U5, optional) +
     * `data` (scrubbed resource JSON, always last — `base.rb:344-369`). */
@@ -88,9 +95,16 @@ final case class ReplicatorSpec(
   def mergeSpec: MergeSpec = MergeSpec(
     keyCols = (if (partitioned) Seq("part_hash") else Nil) :+ remoteKeyCol,
     orderCol = Projection.IngestSeqCol,
-    updateWhere = updateWhere,
+    updateWhere = if (versionCol.isDefined) MergeSpec.Always else updateWhere,
     coalesceOnUpdate = columns.filter(_.setOnce).map(_.name),
-    skipNilCols = columns.filter(_.skipNil).map(_.name))
+    skipNilCols = columns.filter(_.skipNil).map(_.name),
+    versionCol = versionCol)
+}
+
+object ReplicatorSpec {
+  /** The default U2 condition: the resource JSON changed. */
+  val DataChanged: (String => Column, String => Column) => Column =
+    (t, s) => !(t("data") <=> s("data"))
 }
 
 /** The projection engine: raw webhook body -> wide typed row

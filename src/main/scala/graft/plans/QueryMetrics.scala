@@ -18,8 +18,21 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * Besides the bytes, the same listener counts the run's layers: the jobs
   * started, the stages completed (a stage skipped because its shuffle
   * output was reused is not counted) and the tasks ended, with the tasks'
-  * summed run time, CPU time and GC time. Task time far above CPU time
-  * points at waiting (codegen compiles, locks, IO), not computing.
+  * summed run time, CPU time, GC time and deserialize time. Task time far
+  * above CPU time points at waiting (codegen compiles, locks, IO), not
+  * computing; deserialize time is the per-task cost of loading the task's
+  * closure and classes.
+  *
+  * `codegenClasses` and `codegenMs` are the classes Spark generated
+  * (`CodegenMetrics`) and the time its code generator spent compiling
+  * during the action. Both counters are JVM-wide: a compile by a
+  * concurrent query counts too, so they are exact only for an action that
+  * runs alone.
+  *
+  * Nesting: the action runs in its own job group and the caller's group
+  * (id, description, interrupt flag) is restored afterwards, so an outer
+  * measurement keeps counting the jobs that run after an inner one
+  * returns. Jobs of the inner action count toward the inner one only.
   */
 object QueryMetrics {
 
@@ -29,7 +42,20 @@ object QueryMetrics {
       memorySpillBytes: Long, diskSpillBytes: Long,
       resultRows: Long, wallMs: Long,
       jobs: Long, stages: Long, tasks: Long,
-      taskTimeMs: Long, cpuMs: Long, gcMs: Long)
+      taskTimeMs: Long, cpuMs: Long, gcMs: Long,
+      deserializeMs: Long, codegenClasses: Long, codegenMs: Long)
+
+  /** Job-group properties `setJobGroup` sets; restored after a measurement. */
+  private val GroupProps =
+    Seq("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel")
+
+  /** (classes generated, compile ns) so far in this JVM. The compile time
+    * is the code generator's own exact counter: `CodegenMetrics` keeps it
+    * only as a sampled histogram, whose scaled sum is not monotonic once
+    * the sample is full. */
+  private def codegenSoFar: (Long, Long) = (
+    org.apache.spark.metrics.source.CodegenMetrics.METRIC_GENERATED_CLASS_BYTECODE_SIZE.getCount,
+    org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator.compileTime)
 
   private val groupCounter = new java.util.concurrent.atomic.AtomicLong(0L)
 
@@ -55,7 +81,7 @@ object QueryMetrics {
     var input = 0L; var records = 0L
     var sw = 0L; var sr = 0L; var memSpill = 0L; var diskSpill = 0L
     var jobs = 0L; var stages = 0L; var tasks = 0L
-    var runMs = 0L; var cpuNs = 0L; var gcMs = 0L
+    var runMs = 0L; var cpuNs = 0L; var gcMs = 0L; var deserMs = 0L
     val listener = new SparkListener {
       override def onJobStart(j: SparkListenerJobStart): Unit =
         if (Option(j.properties)
@@ -78,21 +104,27 @@ object QueryMetrics {
           runMs += m.executorRunTime
           cpuNs += m.executorCpuTime
           gcMs += m.jvmGCTime
+          deserMs += m.executorDeserializeTime
         }
       }
     }
     sc.addSparkListener(listener)
+    val callerGroup = GroupProps.map(sc.getLocalProperty)
+    val (classes0, compileNs0) = codegenSoFar
     val t0 = System.nanoTime()
     try {
       sc.setJobGroup(group, s"QueryMetrics.measure($group)",
         interruptOnCancel = false)
-      val result = try action finally sc.clearJobGroup()
+      val result = try action
+        finally GroupProps.zip(callerGroup).foreach { case (k, v) => sc.setLocalProperty(k, v) }
       // listener events are posted asynchronously; drain before reading
       org.apache.spark.GraftListenerBridge.drainListeners(sc)
       val wallMs = (System.nanoTime() - t0) / 1000000L
+      val (classes1, compileNs1) = codegenSoFar
       val m = listener.synchronized {
         Metrics(input, records, sw, sr, memSpill, diskSpill, 0L, wallMs,
-          jobs, stages, tasks, runMs, cpuNs / 1000000L, gcMs)
+          jobs, stages, tasks, runMs, cpuNs / 1000000L, gcMs,
+          deserMs, classes1 - classes0, (compileNs1 - compileNs0) / 1000000L)
       }
       (result, m)
     } finally sc.removeSparkListener(listener)
@@ -104,5 +136,6 @@ object QueryMetrics {
       f"${m.inputRecords}rec shuffle=${m.shuffleWriteBytes}B/w+${m.shuffleReadBytes}B/r " +
       f"spill=${m.memorySpillBytes}+${m.diskSpillBytes}B " +
       f"jobs=${m.jobs} stages=${m.stages} tasks=${m.tasks} " +
-      f"task=${m.taskTimeMs}ms cpu=${m.cpuMs}ms gc=${m.gcMs}ms"
+      f"task=${m.taskTimeMs}ms cpu=${m.cpuMs}ms gc=${m.gcMs}ms " +
+      f"deser=${m.deserializeMs}ms codegen=${m.codegenClasses}/${m.codegenMs}ms"
 }

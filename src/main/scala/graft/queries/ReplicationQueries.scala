@@ -37,13 +37,15 @@ object ReplicationQueries {
 
   /** U1+U2+U4 — idempotent conditional upsert: batch 1 (even event_ids) forms
     * the snapshot, batch 2 (odd) merges in under event-time monotonicity
-    * (`src.ts > tgt.ts`), with in-batch last-wins dedup on the key. Late
-    * events in batch 2 must NOT overwrite newer snapshot rows. */
+    * (`versionCol` ts: `src.ts > tgt.ts`), with in-batch dedup on the key to
+    * the greatest ts (ties: the earliest event_id) — what applying the
+    * events one at a time would keep. Late events in batch 2 must NOT
+    * overwrite newer snapshot rows. */
   def q10(spark: SparkSession, d: String): DataFrame = {
     val base = eventsBase(spark, d)
     val spec = MergeSpec(
       keyCols = Seq("user_id"), orderCol = "event_id",
-      updateWhere = (t, s) => s("ts_ms") > t("ts_ms"))
+      versionCol = Some("ts_ms"))
     val target = Merge.dedupLastWins(base.filter(col("event_id") % 2 === 0), spec)
     val source = base.filter(col("event_id") % 2 === 1)
     Merge.upsert(target, source, spec)
@@ -52,9 +54,9 @@ object ReplicationQueries {
 
   val q10Sql: String = s"""
     WITH base AS ($eventsBaseSql),
-    b1 AS (SELECT * FROM (SELECT *, row_number() OVER (PARTITION BY user_id ORDER BY event_id DESC) AS rn
+    b1 AS (SELECT * FROM (SELECT *, row_number() OVER (PARTITION BY user_id ORDER BY ts_ms DESC, event_id) AS rn
            FROM base WHERE event_id % 2 = 0) WHERE rn = 1),
-    b2 AS (SELECT * FROM (SELECT *, row_number() OVER (PARTITION BY user_id ORDER BY event_id DESC) AS rn
+    b2 AS (SELECT * FROM (SELECT *, row_number() OVER (PARTITION BY user_id ORDER BY ts_ms DESC, event_id) AS rn
            FROM base WHERE event_id % 2 = 1) WHERE rn = 1)
     SELECT coalesce(b1.user_id, b2.user_id) AS user_id,
       CASE WHEN b1.user_id IS NULL THEN b2.event_id
@@ -304,7 +306,7 @@ object ReplicationQueries {
     val base = eventsBase(spark, d)
     val spec = MergeSpec(
       keyCols = Seq("user_id"), orderCol = "event_id",
-      updateWhere = (t, s) => s("ts_ms") > t("ts_ms"))
+      versionCol = Some("ts_ms"))
     val target = Merge.dedupLastWins(base.filter(col("event_id") % 2 === 0), spec)
     val source = base.filter(col("event_id") % 2 === 1)
     Merge.changedRows(target, source, spec)
@@ -313,9 +315,9 @@ object ReplicationQueries {
 
   val q86Sql: String = s"""
     WITH base AS ($eventsBaseSql),
-    b1 AS (SELECT * FROM (SELECT *, row_number() OVER (PARTITION BY user_id ORDER BY event_id DESC) AS rn
+    b1 AS (SELECT * FROM (SELECT *, row_number() OVER (PARTITION BY user_id ORDER BY ts_ms DESC, event_id) AS rn
            FROM base WHERE event_id % 2 = 0) WHERE rn = 1),
-    b2 AS (SELECT * FROM (SELECT *, row_number() OVER (PARTITION BY user_id ORDER BY event_id DESC) AS rn
+    b2 AS (SELECT * FROM (SELECT *, row_number() OVER (PARTITION BY user_id ORDER BY ts_ms DESC, event_id) AS rn
            FROM base WHERE event_id % 2 = 1) WHERE rn = 1)
     SELECT b2.user_id, b2.event_id, b2.event_type, b2.ts_ms,
       CAST(b2.v AS DOUBLE) AS v

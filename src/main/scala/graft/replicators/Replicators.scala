@@ -98,7 +98,7 @@ object Replicators {
         ColumnSpec("updated_at", TimestampType, Seq("updatedAt"),
           convert = Converters.parseTime)),
       timestampCol = Some("updated_at"),
-      updateWhere = (t, s) => t("updated_at") < s("updated_at"))
+      versionCol = Some("updated_at"))
   }
 
   /** `aws_pricing_v1` descriptor (`lib/webhookdb/replicator/aws_pricing_v1.rb:27-70`):
@@ -406,7 +406,7 @@ object Replicators {
       ColumnSpec("order_number", LongType, Seq("order_number")),
       ColumnSpec("updated_at", TimestampType, Seq("updated_at"), convert = Converters.parseTime)),
     timestampCol = Some("updated_at"),
-    updateWhere = (t, s) => t("updated_at") < s("updated_at"))
+    versionCol = Some("updated_at"))
 
   /** `shopify_customer_v1` (`lib/webhookdb/replicator/shopify_customer_v1.rb`). */
   lazy val shopifyCustomerV1: ReplicatorSpec = ReplicatorSpec(
@@ -423,7 +423,7 @@ object Replicators {
       ColumnSpec("state", StringType, Seq("state")),
       ColumnSpec("updated_at", TimestampType, Seq("updated_at"), convert = Converters.parseTime)),
     timestampCol = Some("updated_at"),
-    updateWhere = (t, s) => t("updated_at") < s("updated_at"))
+    versionCol = Some("updated_at"))
 
   /** `signalwire_message_v1` (`lib/webhookdb/replicator/signalwire_message_v1.rb`):
     * twilio-compatible shape keyed on sid. */
@@ -440,7 +440,7 @@ object Replicators {
       ColumnSpec("status", StringType, Seq("status")),
       ColumnSpec("to", StringType, Seq("to"))),
     timestampCol = Some("date_updated"),
-    updateWhere = (t, s) => t("date_updated") < s("date_updated"))
+    versionCol = Some("date_updated"))
 
   /** `intercom_conversation_v1`
     * (`lib/webhookdb/replicator/intercom_conversation_v1.rb`). */
@@ -483,7 +483,7 @@ object Replicators {
       ColumnSpec("published_at", TimestampType, Seq("attributes", "published_at"),
         convert = Converters.parseTime)),
     timestampCol = Some("updated_at"),
-    updateWhere = (t, s) => t("updated_at") < s("updated_at"),
+    versionCol = Some("updated_at"),
     dependsOn = Some("transistor_show_v1"))
 
   private def ts(name: String, key: String = null) =
@@ -549,7 +549,7 @@ object Replicators {
         ColumnSpec("created_at", TimestampType, Seq("createdAt"), convert = Converters.parseTime),
         ColumnSpec("updated_at", TimestampType, Seq("updatedAt"), convert = Converters.parseTime)),
       timestampCol = Some("updated_at"),
-      updateWhere = (t, s) => t("updated_at") < s("updated_at"))
+      versionCol = Some("updated_at"))
 
   /** `sponsy_customer_v1` (`lib/webhookdb/replicator/sponsy_customer_v1.rb`). */
   lazy val sponsyCustomerV1: ReplicatorSpec = sponsySpec("sponsy_customer_v1", Seq(
@@ -648,7 +648,7 @@ object Replicators {
         convert = Converters.parseTime),
       ColumnSpec("website", StringType, Seq("attributes", "website"))),
     timestampCol = Some("updated_at"),
-    updateWhere = (t, s) => t("updated_at") < s("updated_at"))
+    versionCol = Some("updated_at"))
 
   /** `front_conversation_v1` (`lib/webhookdb/replicator/front_conversation_v1.rb`). */
   lazy val frontConversationV1: ReplicatorSpec = ReplicatorSpec(
@@ -692,7 +692,7 @@ object Replicators {
       ColumnSpec("user_id", LongType, Seq("user", "id")),
       ColumnSpec("node_id", StringType, Seq("node_id"))),
     timestampCol = Some("updated_at"),
-    updateWhere = (t, s) => t("updated_at") < s("updated_at"))
+    versionCol = Some("updated_at"))
 
   /** `increase_ach_transfer_v1`
     * (`lib/webhookdb/replicator/increase_ach_transfer_v1.rb`). */
@@ -747,7 +747,7 @@ object Replicators {
         ColumnSpec("updated", TimestampType, Seq("created"), eventKey = Seq("created"),
           convert = Converters.unixTs),
       timestampCol = Some("updated"),
-      updateWhere = (t, s) => t("updated") < s("updated"),
+      versionCol = Some("updated"),
       eventPred = body => get_json_object(body, "$.object") === "event",
       resourcePath = Seq("data", "object"))
 
@@ -772,7 +772,7 @@ object Replicators {
       ColumnSpec("updated", TimestampType, Seq("created"), eventKey = Seq("created"),
         convert = Converters.unixTs)),
     timestampCol = Some("updated"),
-    updateWhere = (t, s) => t("updated") < s("updated"),
+    versionCol = Some("updated"),
     eventPred = body => get_json_object(body, "$.object") === "event",
     resourcePath = Seq("data", "object"))
 
@@ -810,7 +810,7 @@ object Replicators {
       ColumnSpec("status", StringType, Seq("status")),
       ColumnSpec("to", StringType, Seq("to"))),
     timestampCol = Some("date_updated"),
-    updateWhere = (t, s) => t("date_updated") < s("date_updated"))
+    versionCol = Some("date_updated"))
 
   /** `github_issue_v1` (`lib/webhookdb/replicator/github_issue_v1.rb`):
     * nested digs, BIGINT array plucks from label/assignee objects. */
@@ -833,7 +833,7 @@ object Replicators {
       ColumnSpec("closed_at", TimestampType, Seq("closed_at"), convert = Converters.parseTime),
       ColumnSpec("updated_at", TimestampType, Seq("updated_at"), convert = Converters.parseTime)),
     timestampCol = Some("updated_at"),
-    updateWhere = (t, s) => t("updated_at") < s("updated_at"))
+    versionCol = Some("updated_at"))
 
   /** `intercom_contact_v1` (`lib/webhookdb/replicator/intercom_contact_v1.rb`):
     * delete/archive webhooks carry partial payloads — skip-nil keeps the
@@ -955,7 +955,7 @@ object Replicators {
       ColumnSpec("user_id", LongType, Seq("user", "id")),
       ColumnSpec("node_id", StringType, Seq("node_id"))),
     timestampCol = Some("updated_at"),
-    updateWhere = (t, s) => t("updated_at") < s("updated_at"))
+    versionCol = Some("updated_at"))
 
   /** `increase_transaction_v1`
     * (`lib/webhookdb/replicator/increase_transaction_v1.rb`): legacy `date`
@@ -1007,7 +1007,7 @@ object Replicators {
       ColumnSpec("created_at", TimestampType, Seq("createdAt"), convert = Converters.parseTime),
       ColumnSpec("updated_at", TimestampType, Seq("updatedAt"), convert = Converters.parseTime)),
     timestampCol = Some("updated_at"),
-    updateWhere = (t, s) => t("updated_at") < s("updated_at"))
+    versionCol = Some("updated_at"))
 
   /** `transistor_episode_stats_v1`
     * (`lib/webhookdb/replicator/transistor_episode_stats_v1.rb:23-67`):

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.operators.KeyedStore
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftColumnBridge, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.StructType
@@ -172,16 +172,19 @@ object BatchStore {
     * `compactEvery`-th batch (counting from the first: batch ids
     * compactEvery-1, 2*compactEvery-1, ... — i.e. after N NEW batches),
     * inside foreachBatch so the stream's single-writer serialization
-    * covers the swap. */
+    * covers the swap. Both run under the session of `docs` (see
+    * WebhookStream on why not under the batch's own session). */
   def loop(docs: DataFrame, checkpointDir: String, compactEvery: Int)(
       onBatch: (SparkSession, DataFrame, Long) => Unit)(
-      onCompact: SparkSession => Unit): StreamingQuery =
+      onCompact: SparkSession => Unit): StreamingQuery = {
+    val spark = docs.sparkSession
     docs.writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        onBatch(batch.sparkSession, batch, batchId)
+        onBatch(spark, GraftColumnBridge.onSession(spark, batch), batchId)
         if (compactEvery > 0 && (batchId + 1) % compactEvery == 0)
-          onCompact(batch.sparkSession)
+          onCompact(spark)
       }
       .start()
+  }
 }

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.operators.IncrementalAgg
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, GraftColumnBridge}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /** Continuously-maintained rollup: the streaming face of
@@ -23,7 +23,7 @@ object RollupStream {
   def start(spark: org.apache.spark.sql.SparkSession, sourceDir: String,
             stateDir: String, checkpointDir: String, schemaDdl: String,
             keys: Seq[String], valueCol: String): StreamingQuery = {
-    val store = new SnapshotStore(stateDir)
+    val store = new SnapshotStore(stateDir, spark = spark)
     spark.readStream
       .schema(schemaDdl)
       .json(sourceDir)
@@ -31,7 +31,9 @@ object RollupStream {
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val delta = IncrementalAgg.partial(batch, keys, valueCol)
+        // under the caller's session: see WebhookStream on why
+        val delta = IncrementalAgg.partial(
+          GraftColumnBridge.onSession(spark, batch), keys, valueCol)
         // Read the PREDECESSOR batch's version, never LATEST: a replayed
         // batch (recovery) must fold onto the state it originally saw, or
         // its rows double-count. With version = batchId the rewrite lands

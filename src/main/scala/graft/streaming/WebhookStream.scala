@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.operators.{Pipeline, Projection, ReplicatorSpec}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftColumnBridge, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
@@ -14,7 +14,18 @@ import java.nio.file.{Files, Paths, StandardOpenOption}
   * Streaming semantics preserved (SURVEY §2.11): at-least-once ingest with
   * exactly-once effect via the idempotent merge; out-of-order data handled by
   * `updateWhere` monotonicity, NOT watermark drops — no state store needed,
-  * the snapshot itself is the state.
+  * the snapshot itself is the state. A spec with a `versionCol` merges to
+  * the same table wherever the microbatch boundaries fall.
+  *
+  * Each microbatch's jobs run under the CALLER's session, not under
+  * `batch.sparkSession` ([[org.apache.spark.sql.GraftColumnBridge.onSession]]).
+  * Every `start` call makes a new `StreamingQuery`, and Spark runs each one
+  * on a clone of the session; with artifact isolation
+  * (`spark.sql.artifact.isolation.enabled`, on by default) the clone's id
+  * reaches the executors, which build a fresh classloader for it. The
+  * codegen cache is keyed by that classloader, so a back-to-back
+  * AvailableNow drain under the clone recompiled the same 54-74 classes on
+  * every drain; under the caller's session the second drain compiles none.
   */
 object WebhookStream {
 
@@ -43,15 +54,15 @@ object WebhookStream {
     if (spec.partitioned)
       return startPartitioned(spark, spec, sourceDir, snapshotDir,
         checkpointDir, buckets)
-    val store = new SnapshotStore(snapshotDir)
+    val store = new SnapshotStore(snapshotDir, spark = spark)
     spark.readStream
       .schema(requestSchema)
       .json(sourceDir)
       .writeStream
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val sparkB = batch.sparkSession
+      .foreachBatch { (streamed: DataFrame, batchId: Long) =>
+        val batch = GraftColumnBridge.onSession(spark, streamed)
         // Read the PREDECESSOR version for batchId > 0, never LATEST (the
         // same recovery rule as RollupStream): a crash after the pointer
         // flip but before the checkpoint commit replays this batch, and
@@ -62,7 +73,7 @@ object WebhookStream {
         // fresh checkpoint can continue an existing snapshot.
         val target =
           if (batchId == 0) {
-            val t = store.readOr(Pipeline.emptyTarget(spec, sparkB))
+            val t = store.readOr(Pipeline.emptyTarget(spec, spark))
             // Replay detection: LATEST already pointing at v0 means batch 0
             // crashed after the pointer flip but before the checkpoint
             // commit. Reading LATEST lazily would make write() overwrite v0
@@ -104,15 +115,14 @@ object WebhookStream {
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        val sparkB = batch.sparkSession
         // the ingest seq column stays in the stored table: it is the merge
         // order for subsequent microbatches
-        val projected = P.project(spec, batch)
+        val projected = P.project(spec, GraftColumnBridge.onSession(spark, batch))
         if (initialized.compareAndSet(false, true))
           PartitionedStore.write(Merge.dedupLastWins(projected, spec.mergeSpec),
             tableDir, spec.remoteKeyCol, buckets)
         else
-          PartitionedStore.mergeInto(sparkB, tableDir, projected,
+          PartitionedStore.mergeInto(spark, tableDir, projected,
             spec.mergeSpec, spec.remoteKeyCol, buckets)
         ()
       }
@@ -129,8 +139,11 @@ object WebhookStream {
   * flip: replay only ever needs the current and predecessor versions, and
   * an unpruned store grows O(batches x table size) — unbounded disk for a
   * long-running stream.
+  *
+  * Reads run under `spark` (default: the session active at construction).
   */
-final class SnapshotStore(dir: String, retain: Int = 2) {
+final class SnapshotStore(dir: String, retain: Int = 2,
+                          spark: SparkSession = SparkSession.active) {
   require(retain >= 2, "must retain current + predecessor for replay")
   private val pointer = Paths.get(dir, "LATEST")
   Files.createDirectories(Paths.get(dir))
@@ -139,7 +152,7 @@ final class SnapshotStore(dir: String, retain: Int = 2) {
     if (Files.exists(pointer)) Some(Files.readString(pointer).trim) else None
 
   def readOr(empty: => DataFrame): DataFrame = latestVersion match {
-    case Some(v) => org.apache.spark.sql.SparkSession.active.read.parquet(s"$dir/$v")
+    case Some(v) => spark.read.parquet(s"$dir/$v")
     case None => empty
   }
 
@@ -147,7 +160,7 @@ final class SnapshotStore(dir: String, retain: Int = 2) {
   def readVersion(batchId: Long): Option[DataFrame] = {
     val p = Paths.get(dir, s"v$batchId")
     if (Files.isDirectory(p))
-      Some(org.apache.spark.sql.SparkSession.active.read.parquet(p.toString))
+      Some(spark.read.parquet(p.toString))
     else None
   }
 

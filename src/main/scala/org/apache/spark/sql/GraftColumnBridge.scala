@@ -17,4 +17,20 @@ object GraftColumnBridge {
   def ofRows(spark: SparkSession,
              plan: catalyst.plans.logical.LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
+
+  /** `StructType.asNullable` (`private[spark]`): a file source reads every
+    * column as nullable, nested fields included, whatever the writer's
+    * schema said — a relation built by hand must do the same. */
+  def asNullable(schema: types.StructType): types.StructType = schema.asNullable
+
+  /** A `foreachBatch` microbatch re-bound to `spark`, the session that
+    * started the stream. Every `StreamingQuery` runs on its own clone of
+    * that session, and with artifact isolation (on by default in Spark 4.1)
+    * executors build a fresh classloader per session — so the jobs of a
+    * batch run under `batch.sparkSession` miss the codegen cache, which is
+    * keyed by classloader, and recompile every plan once per query. The
+    * batch's plan is a `LogicalRDD` over the already-planned microbatch, so
+    * re-binding re-plans nothing upstream. */
+  def onSession(spark: SparkSession, batch: DataFrame): DataFrame =
+    ofRows(spark, batch.queryExecution.logical)
 }

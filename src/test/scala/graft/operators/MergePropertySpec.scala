@@ -8,7 +8,13 @@ import org.scalacheck.Gen
   * target snapshots and source batches are merged via `Merge.mergeBatch`
   * and compared against a naive per-key map reference implementing the same
   * contract — last-wins in-batch dedup by orderCol, monotonic updateWhere,
-  * set-once and skip-nil column policies, and the change marker. */
+  * set-once and skip-nil column policies, and the change marker.
+  *
+  * The second half checks prefix consistency of a versioned spec: random
+  * delivery sequences, cut at random microbatch boundaries, must merge to
+  * the table that applying one delivery at a time leaves — through
+  * `Merge.upsert`, `PartitionedStore.mergeInto` and the stream's
+  * first-write path (dedup, then `PartitionedStore.write`). */
 class MergePropertySpec extends SparkSpec {
   import spark.implicits._
 
@@ -81,6 +87,84 @@ class MergePropertySpec extends SparkSpec {
       val want = reference(target, source, hashes)
       assert(got == want, s"\ncase $i\n got=${got.toSeq.sortBy(_._1).take(5)}" +
         s"\nwant=${want.toSeq.sortBy(_._1).take(5)}")
+    }
+  }
+
+  // ------------------------------------------------ versioned: prefix consistency
+
+  // delivery: (key, seq = ingest order, v = version, payload)
+  private type D = (String, Long, Long, String)
+  private val vspec = MergeSpec(keyCols = Seq("key"), orderCol = "seq",
+    versionCol = Some("v"))
+
+  /** A delivery sequence over 6 keys mixing fresh events, identical
+    * redeliveries, late (older) events, equal-version events with another
+    * payload, and reordered pairs (newer sent first, older right after). */
+  private def deliveries(rng: scala.util.Random, n: Int): Vector[D] = {
+    val latest = scala.collection.mutable.Map.empty[String, (Long, String)]
+    val out = scala.collection.mutable.ArrayBuffer.empty[(String, Long, String)]
+    while (out.size < n) {
+      val k = s"k${rng.nextInt(6)}"
+      val (v0, p0) = latest.getOrElse(k, (10L, "p0"))
+      def fresh(v: Long) = { val p = s"p$v-${rng.nextInt(1000)}"; latest(k) = (v, p); (k, v, p) }
+      rng.nextInt(10) match {
+        case 0 | 1 => out += ((k, v0, p0))                            // redelivery
+        case 2 => out += ((k, v0 - 1 - rng.nextInt(5), "late"))      // late event
+        case 3 => out += ((k, v0, s"tie-${rng.nextInt(1000)}"))      // equal version
+        case 4 =>                                                     // reordered pair
+          out += fresh(v0 + 2); out += ((k, v0 + 1, "older"))
+        case _ => out += fresh(v0 + 1 + rng.nextInt(3))
+      }
+    }
+    out.take(n).toVector.zipWithIndex.map { case ((k, v, p), i) => (k, i.toLong, v, p) }
+  }
+
+  /** The contract: apply each delivery on its own, in ingest order. */
+  private def fold(ds: Seq[D]): Map[String, D] =
+    ds.foldLeft(Map.empty[String, D]) { (t, d) =>
+      t.get(d._1) match {
+        case Some(cur) if cur._3 >= d._3 => t
+        case _ => t.updated(d._1, d)
+      }
+    }
+
+  /** Random cut points: the sequence as 1-4 consecutive microbatches. */
+  private def cut(rng: scala.util.Random, ds: Vector[D]): Seq[Vector[D]] = {
+    val cuts = (Seq.fill(rng.nextInt(4))(rng.nextInt(ds.size + 1)) :+ 0 :+ ds.size).distinct.sorted
+    cuts.sliding(2).collect { case Seq(a, b) if b > a => ds.slice(a, b) }.toSeq
+  }
+
+  private def df(ds: Seq[D]) = ds.toDF("key", "seq", "v", "payload")
+  private def rows(d: org.apache.spark.sql.DataFrame): Map[String, D] =
+    d.select("key", "seq", "v", "payload").collect()
+      .map(r => r.getString(0) -> ((r.getString(0), r.getLong(1), r.getLong(2), r.getString(3))))
+      .toMap
+
+  test("a versioned merge equals the one-at-a-time fold wherever batches are cut") {
+    val rng = new scala.util.Random(6L)
+    (0 until 12).foreach { i =>
+      val ds = deliveries(rng, 12 + rng.nextInt(20))
+      val batches = cut(rng, ds)
+      val merged = batches.foldLeft(Map.empty[String, D]) { (t, b) =>
+        rows(Merge.upsert(df(t.values.toSeq), df(b), vspec))
+      }
+      assert(merged == fold(ds), s"case $i, batches ${batches.map(_.size)}: $ds")
+      // the stream's first-write path: the whole sequence as one batch
+      assert(rows(Merge.dedupLastWins(df(ds), vspec)) == fold(ds), s"case $i (dedup): $ds")
+    }
+  }
+
+  test("PartitionedStore: first write then mergeInto equals the fold at any cut") {
+    val rng = new scala.util.Random(7L)
+    (0 until 3).foreach { i =>
+      val ds = deliveries(rng, 24)
+      val batches = cut(rng, ds)
+      val dir = java.nio.file.Files.createTempDirectory("versioned-store").toString
+      PartitionedStore.write(Merge.dedupLastWins(df(batches.head), vspec), dir, "key", 4)
+      assert(rows(PartitionedStore.read(spark, dir)) == fold(batches.head), s"case $i first write")
+      batches.tail.foreach(b => PartitionedStore.mergeInto(spark, dir, df(b), vspec, "key", 4))
+      assert(rows(PartitionedStore.read(spark, dir)) == fold(ds),
+        s"case $i, batches ${batches.map(_.size)}: $ds")
     }
   }
 }

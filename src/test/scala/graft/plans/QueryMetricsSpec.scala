@@ -66,4 +66,45 @@ class QueryMetricsSpec extends SparkSpec {
     assert((shared.jobs, shared.stages, shared.tasks) == (alone.jobs, alone.stages, alone.tasks),
       s"alone: ${QueryMetrics.render(alone)}; shared: ${QueryMetrics.render(shared)}")
   }
+
+  test("a nested measurement restores the caller's job group") {
+    val sc = spark.sparkContext
+    def a() = Tables.nation(spark, sfDir).count()
+    def c() = Tables.region(spark, sfDir).count()
+    val (_, alone) = QueryMetrics.measureAction(spark) { a(); c() }
+    // built outside: reading a table's footers is a job of whoever builds it
+    val orders = Tables.orders(spark, sfDir)
+    val (_, outer) = QueryMetrics.measureAction(spark) {
+      a()
+      val inner = QueryMetrics.measure(orders)
+      assert(inner.jobs >= 1 && inner.resultRows > 0)
+      c() // runs after the inner call returned: still the outer's
+    }
+    assert(outer.jobs == alone.jobs, s"alone: ${QueryMetrics.render(alone)}; " +
+      s"outer: ${QueryMetrics.render(outer)}")
+    sc.setJobGroup("QueryMetricsSpec-caller", "caller", interruptOnCancel = true)
+    try {
+      QueryMetrics.measure(Tables.region(spark, sfDir))
+      assert(sc.getLocalProperty("spark.jobGroup.id") == "QueryMetricsSpec-caller")
+      assert(sc.getLocalProperty("spark.job.description") == "caller")
+      assert(sc.getLocalProperty("spark.job.interruptOnCancel") == "true")
+    } finally sc.clearJobGroup()
+    QueryMetrics.measure(Tables.region(spark, sfDir))
+    assert(sc.getLocalProperty("spark.jobGroup.id") == null)
+  }
+
+  test("deserialize time and this action's codegen compiles are reported") {
+    // a literal no other plan carries: its whole-stage code is new
+    val k = System.nanoTime() % 1000000L + 1000003L
+    def q() = spark.range(1000).selectExpr(s"id * $k + 7 AS x").where(s"x % $k = 7")
+    val first = QueryMetrics.measure(q())
+    assert(first.resultRows == 1000)
+    assert(first.codegenClasses >= 1 && first.codegenMs >= 0, QueryMetrics.render(first))
+    assert(first.deserializeMs >= 0 && first.tasks >= 1, QueryMetrics.render(first))
+    assert(QueryMetrics.render(first).contains(s"codegen=${first.codegenClasses}/"))
+    // the same plan again hits the codegen cache
+    val again = QueryMetrics.measure(q())
+    assert(again.codegenClasses < first.codegenClasses,
+      s"first: ${QueryMetrics.render(first)}; again: ${QueryMetrics.render(again)}")
+  }
 }
