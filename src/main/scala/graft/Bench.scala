@@ -104,6 +104,8 @@ object Bench {
         s""","spillBytes":${m.memorySpillBytes + m.diskSpillBytes}""" +
         s""","jobs":${m.jobs},"stages":${m.stages},"tasks":${m.tasks}""" +
         s""","taskTimeMs":${m.taskTimeMs},"cpuMs":${m.cpuMs},"gcMs":${m.gcMs}""" +
+        s""","deserializeMs":${m.deserializeMs}""" +
+        s""","codegenClasses":${m.codegenClasses},"codegenMs":${m.codegenMs}""" +
         // protocol work metric (Notify POSTs executed in the median run):
         // present only on queries that actually deliver, so a q81 wall
         // move is adjudicated by attempts, not argument

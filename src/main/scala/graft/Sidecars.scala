@@ -208,7 +208,9 @@ object Sidecars {
 
   private def work(m: QueryMetrics.Metrics): ObjectNode = obj(
     "jobs" -> m.jobs, "stages" -> m.stages, "tasks" -> m.tasks,
-    "taskTimeMs" -> m.taskTimeMs, "cpuMs" -> m.cpuMs, "gcMs" -> m.gcMs)
+    "taskTimeMs" -> m.taskTimeMs, "cpuMs" -> m.cpuMs, "gcMs" -> m.gcMs,
+    "deserializeMs" -> m.deserializeMs, "codegenClasses" -> m.codegenClasses,
+    "codegenMs" -> m.codegenMs)
 
   private def node(v: Any): JsonNode = {
     val f = JsonNodeFactory.instance

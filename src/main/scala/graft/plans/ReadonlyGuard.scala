@@ -2,6 +2,7 @@ package graft.plans
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.{Command, InsertIntoStatement, LogicalPlan}
+import scala.jdk.CollectionConverters._
 
 /** The arbitrary-SQL query surface with the reference's safety envelope
   * (§3.3): SELECT-only enforcement, row cap with `max_rows_reached`
@@ -120,8 +121,10 @@ object ReadonlyGuard {
 
   /** The shared cap-collect-rewrap: fetch maxRows+1 (the sentinel that
     * distinguishes "exactly maxRows" from "truncated"), rewrap the kept
-    * rows as a DataFrame. `wrap` receives the one real collect so the
-    * metered path can put its listener around that exact execution. */
+    * rows as a DataFrame. The rewrap is a `LocalRelation` over the rows
+    * already held, so collecting it runs no job. `wrap` receives the one
+    * real collect so the metered path can put its listener around that
+    * exact execution. */
   private def cappedCollect[A](spark: SparkSession,
                                df: org.apache.spark.sql.DataFrame, maxRows: Int)(
       wrap: (() => Array[org.apache.spark.sql.Row]) => A): (QueryResult, Long, A) = {
@@ -130,8 +133,7 @@ object ReadonlyGuard {
     require(capped != null, "wrap must invoke the collect")
     val reached = capped.length > maxRows
     val rows = if (reached) capped.take(maxRows) else capped
-    (QueryResult(spark.createDataFrame(
-      spark.sparkContext.parallelize(rows.toIndexedSeq), df.schema), reached),
+    (QueryResult(spark.createDataFrame(rows.toSeq.asJava, df.schema), reached),
       rows.length.toLong, wrapped)
   }
 

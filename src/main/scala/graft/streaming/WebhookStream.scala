@@ -5,7 +5,7 @@ import org.apache.spark.sql.{DataFrame, GraftColumnBridge, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
-import java.nio.file.{Files, Paths, StandardOpenOption}
+import java.nio.file.{Files, Paths, StandardCopyOption}
 
 /** Structured Streaming ingest (S1, §3.1): a landed-webhook log (JSON files /
   * any streaming source) drives `foreachBatch(Pipeline.upsertBatch)` into a
@@ -170,8 +170,12 @@ final class SnapshotStore(dir: String, retain: Int = 2,
     graft.operators.TableLock.withLock(dir) {
       val v = s"v$batchId"
       df.write.mode("overwrite").parquet(s"$dir/$v")
-      Files.writeString(pointer, v,
-        StandardOpenOption.CREATE, StandardOpenOption.TRUNCATE_EXISTING)
+      // write-then-rename: a reader (or a crash) never sees a truncated
+      // pointer, only the previous version or this one
+      val tmp = Paths.get(dir, ".LATEST.tmp")
+      Files.writeString(tmp, v)
+      Files.move(tmp, pointer, StandardCopyOption.ATOMIC_MOVE,
+        StandardCopyOption.REPLACE_EXISTING)
       prune(batchId)
     }
 

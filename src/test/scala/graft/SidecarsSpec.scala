@@ -56,5 +56,11 @@ class SidecarsSpec extends SparkSpec {
     assert(got.fieldNames.asScala.toSet -- stamps == want.fieldNames.asScala.toSet -- stamps)
     val q158 = got.get("50_langs").get("q158")
     assert(q158.get("rows").asLong > 0 && q158.get("work").get("jobs").asLong > 0)
+    val work = q158.get("work")
+    assert(work.fieldNames.asScala.toSet == Set("jobs", "stages", "tasks", "taskTimeMs",
+      "cpuMs", "gcMs", "deserializeMs", "codegenClasses", "codegenMs"), work.toString)
+    Seq("deserializeMs", "codegenClasses", "codegenMs").foreach { k =>
+      assert(work.get(k).isIntegralNumber && work.get(k).asLong >= 0, s"$k in $work")
+    }
   }
 }

@@ -136,4 +136,24 @@ class ReadonlyGuardSpec extends SparkSpec {
     assert(m.inputBytes > 10000,
       s"served collect must charge the real payload scan, got ${m.inputBytes}B")
   }
+
+  test("the guarded result holds its rows: collecting it runs no job") {
+    val dir = java.nio.file.Files.createTempDirectory("guard-local").toString
+    import spark.implicits._
+    (1 to 50).map(i => (i.toLong, s"v$i", BigDecimal(i) / 4, new java.sql.Timestamp(i * 1000L)))
+      .toDF("id", "v", "amt", "ts").write.mode("overwrite").parquet(dir)
+    spark.read.parquet(dir).createOrReplaceTempView("guard_local_t")
+    val sql = "SELECT id, v, amt, ts FROM guard_local_t WHERE id > 10"
+    val direct = spark.sql(sql)
+    val (res, _) = ReadonlyGuard.runMetered(spark, sql, maxRows = 30)
+    assert(res.maxRowsReached)
+    assert(res.df.schema == direct.schema)
+    val (rows, m) = QueryMetrics.measureAction(spark)(res.df.collect())
+    assert(m.jobs == 0, QueryMetrics.render(m))
+    assert(rows.length == 30)
+    assert(rows.toSet.subsetOf(direct.collect().toSet))
+    val whole = ReadonlyGuard.run(spark, sql)
+    assert(whole.df.collect().sortBy(_.getLong(0)).toSeq ==
+      direct.collect().sortBy(_.getLong(0)).toSeq)
+  }
 }

@@ -3,6 +3,7 @@ package graft.streaming
 import graft.SparkSpec
 import graft.replicators.Replicators
 import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
 
 /** S1/§3.1 end-to-end: landed webhook files -> Structured Streaming ->
   * foreachBatch merge -> snapshot store; out-of-order + duplicate events
@@ -56,5 +57,37 @@ class WebhookStreamSpec extends SparkSpec {
     assert(store.readVersion(2).isEmpty && store.readVersion(0).isEmpty)
     assert(store.readOr(sys.error("missing")).collect()
       .map(_.getString(1)).toSeq == Seq("v4"))
+  }
+
+  test("a reader polling the LATEST pointer only ever sees a committed version") {
+    val dir = Files.createTempDirectory("snapflip").toString
+    import spark.implicits._
+    val store = new SnapshotStore(dir)
+    val flips = 200
+    val committed = new java.util.concurrent.atomic.AtomicLong(-1L)
+    val done = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val bad = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val polls = new java.util.concurrent.atomic.AtomicLong(0L)
+    val reader = new Thread(() => {
+      while (!done.get) {
+        // the pointer names only v<N> of a write that has started: write N
+        // starts after N-1 is committed, so N <= (committed, read after) + 1
+        try store.latestVersion.foreach { v =>
+          val upTo = committed.get + 1
+          if (!v.matches("v\\d+") || v.drop(1).toLong > upTo) bad.add(s"'$v' (bound $upTo)")
+        } catch { case e: java.io.IOException => bad.add(e.toString) }
+        polls.incrementAndGet()
+      }
+    })
+    reader.start()
+    try (0 until flips).foreach { b =>
+      store.write(Seq((b.toLong, s"v$b")).toDF("id", "tag"), b.toLong)
+      committed.set(b.toLong)
+    } finally { done.set(true); reader.join(60000) }
+    assert(!reader.isAlive)
+    assert(bad.isEmpty, bad.asScala.take(5).mkString(", "))
+    assert(polls.get > flips, s"only ${polls.get} polls")
+    assert(store.latestVersion.contains(s"v${flips - 1}"))
+    assert(!Files.exists(Paths.get(dir, ".LATEST.tmp")))
   }
 }
