@@ -5,8 +5,8 @@ package graft.operators
   * jobs at once inside one application — actions are only sequential
   * because driver code calls them sequentially. The second action runs on
   * a FRESH thread spawned from the caller, so Spark's inheritable
-  * thread-local job properties (job group, description, scheduler pool —
-  * the attribution surface [[graft.plans.QueryMetrics]] meters by) are
+  * thread-local job properties (job group, description, scheduler pool,
+  * and the measurement id [[graft.plans.QueryMetrics]] meters by) are
   * inherited exactly; a shared pool would pin whatever group its threads
   * were created under and mis-attribute every later caller's jobs.
   *

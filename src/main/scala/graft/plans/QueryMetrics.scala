@@ -9,11 +9,16 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * so per-org cost attribution and regression alarms have numbers instead
   * of plans.
   *
-  * Attribution is real, not best-effort: the measured action runs inside a
-  * dedicated job group, the listener collects the stage ids of exactly the
-  * jobs carrying that group id, and only task-ends from those stages are
-  * summed — concurrent queries on the same SparkContext (other orgs, other
-  * suites) do not contaminate the numbers.
+  * Attribution is real, not best-effort: the measured action runs with a
+  * local property of its own set to a fresh id, the listener collects the
+  * stage ids of exactly the jobs carrying that id, and only task-ends from
+  * those stages are summed — concurrent queries on the same SparkContext
+  * (other orgs, other suites) do not contaminate the numbers. The property
+  * is not the job group: a Structured Streaming query's thread inherits the
+  * property from the thread that starts the query, and each microbatch's
+  * `setJobGroup(runId)` leaves it alone, so the microbatches of a query
+  * started inside the measured action count toward it. A query started on
+  * a thread that existed before the measurement does not.
   *
   * Besides the bytes, the same listener counts the run's layers: the jobs
   * started, the stages completed (a stage skipped because its shuffle
@@ -29,10 +34,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * concurrent query counts too, so they are exact only for an action that
   * runs alone.
   *
-  * Nesting: the action runs in its own job group and the caller's group
-  * (id, description, interrupt flag) is restored afterwards, so an outer
-  * measurement keeps counting the jobs that run after an inner one
-  * returns. Jobs of the inner action count toward the inner one only.
+  * Nesting: the caller's value of the property is restored afterwards, so
+  * an outer measurement keeps counting the jobs that run after an inner one
+  * returns. Jobs of the inner action count toward the inner one only. The
+  * caller's job group is left as it is.
   */
 object QueryMetrics {
 
@@ -45,9 +50,8 @@ object QueryMetrics {
       taskTimeMs: Long, cpuMs: Long, gcMs: Long,
       deserializeMs: Long, codegenClasses: Long, codegenMs: Long)
 
-  /** Job-group properties `setJobGroup` sets; restored after a measurement. */
-  private val GroupProps =
-    Seq("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel")
+  /** The local property that tags the jobs of one measurement. */
+  private val MeasureKey = "graft.metrics.id"
 
   /** (classes generated, compile ns) so far in this JVM. The compile time
     * is the code generator's own exact counter: `CodegenMetrics` keeps it
@@ -57,7 +61,7 @@ object QueryMetrics {
     org.apache.spark.metrics.source.CodegenMetrics.METRIC_GENERATED_CLASS_BYTECODE_SIZE.getCount,
     org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator.compileTime)
 
-  private val groupCounter = new java.util.concurrent.atomic.AtomicLong(0L)
+  private val idCounter = new java.util.concurrent.atomic.AtomicLong(0L)
 
   /** Run `df.count()` under a metrics listener and return what it cost.
     * For metering a query you are also serving, prefer [[measureAction]] —
@@ -76,7 +80,7 @@ object QueryMetrics {
     * it via `copy`. */
   def measureAction[A](spark: SparkSession)(action: => A): (A, Metrics) = {
     val sc = spark.sparkContext
-    val group = s"graft-metrics-${groupCounter.incrementAndGet()}"
+    val id = s"graft-metrics-${idCounter.incrementAndGet()}"
     val myStages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
     var input = 0L; var records = 0L
     var sw = 0L; var sr = 0L; var memSpill = 0L; var diskSpill = 0L
@@ -85,7 +89,7 @@ object QueryMetrics {
     val listener = new SparkListener {
       override def onJobStart(j: SparkListenerJobStart): Unit =
         if (Option(j.properties)
-            .exists(_.getProperty("spark.jobGroup.id") == group)) synchronized {
+            .exists(_.getProperty(MeasureKey) == id)) synchronized {
           jobs += 1
           j.stageIds.foreach(s => myStages.add(s))
         }
@@ -109,14 +113,12 @@ object QueryMetrics {
       }
     }
     sc.addSparkListener(listener)
-    val callerGroup = GroupProps.map(sc.getLocalProperty)
+    val caller = sc.getLocalProperty(MeasureKey)
     val (classes0, compileNs0) = codegenSoFar
     val t0 = System.nanoTime()
     try {
-      sc.setJobGroup(group, s"QueryMetrics.measure($group)",
-        interruptOnCancel = false)
-      val result = try action
-        finally GroupProps.zip(callerGroup).foreach { case (k, v) => sc.setLocalProperty(k, v) }
+      sc.setLocalProperty(MeasureKey, id)
+      val result = try action finally sc.setLocalProperty(MeasureKey, caller)
       // listener events are posted asynchronously; drain before reading
       org.apache.spark.GraftListenerBridge.drainListeners(sc)
       val wallMs = (System.nanoTime() - t0) / 1000000L

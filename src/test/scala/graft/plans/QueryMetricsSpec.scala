@@ -2,10 +2,11 @@ package graft.plans
 
 import graft.{SparkSpec, Tables}
 import org.apache.spark.sql.functions._
+import java.nio.file.{Files, Path}
 
-/** Metrics capture: job-group scoping makes attribution EXACT even though
-  * the suite harness runs specs in parallel on one shared SparkContext —
-  * these assertions are deliberately strict to prove it. */
+/** Metrics capture: tagging each measurement's jobs makes attribution EXACT
+  * even though the suite harness runs specs in parallel on one shared
+  * SparkContext — these assertions are deliberately strict to prove it. */
 class QueryMetricsSpec extends SparkSpec {
 
   test("a parquet scan reports exactly its own input bytes and records") {
@@ -106,5 +107,38 @@ class QueryMetricsSpec extends SparkSpec {
     val again = QueryMetrics.measure(q())
     assert(again.codegenClasses < first.codegenClasses,
       s"first: ${QueryMetrics.render(first)}; again: ${QueryMetrics.render(again)}")
+  }
+
+  /** A landing dir holding one request file of `n` charge deliveries. */
+  private def landing(n: Int): Path = {
+    val dir = Files.createTempDirectory("qm-stream")
+    val src = Files.createDirectories(dir.resolve("landing"))
+    Files.writeString(src.resolve("req-1.json"), (1 to n).map { i =>
+      val body = s"""{"object":"event","created":$i,"data":{"object":""" +
+        s"""{"id":"ch_$i","object":"charge","amount":$i,"created":$i,"status":"ok"}}}"""
+      s"""{"body":"${body.replace("\"", "\\\"")}","headers":{},"path":"/v1",""" +
+        s""""method":"POST","__ingest_seq":$i}"""
+    }.mkString("\n"))
+    dir
+  }
+
+  private def drain(dir: Path): Unit =
+    graft.streaming.WebhookStream.startPartitioned(spark,
+      graft.replicators.Replicators.stripeChargeV1Partitioned, s"$dir/landing",
+      s"$dir/table", s"$dir/chk", buckets = 4).awaitTermination()
+
+  test("a streaming query started inside the measured action counts its microbatches") {
+    val (_, m) = QueryMetrics.measureAction(spark)(drain(landing(5)))
+    assert(m.jobs >= 1 && m.tasks >= 1, QueryMetrics.render(m))
+
+    // a thread that existed before the measurement carries no measurement id
+    val dir = landing(5)
+    val go = new java.util.concurrent.CountDownLatch(1)
+    val other = new Thread(() => { go.await(); drain(dir) })
+    other.start()
+    val (_, none) = QueryMetrics.measureAction(spark) { go.countDown(); other.join(120000L) }
+    assert(!other.isAlive)
+    assert(graft.operators.PartitionedStore.currentManifest(s"$dir/table").isDefined)
+    assert(none.jobs == 0 && none.tasks == 0, QueryMetrics.render(none))
   }
 }

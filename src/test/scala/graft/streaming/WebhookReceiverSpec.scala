@@ -3,8 +3,9 @@ package graft.streaming
 import graft.SparkSpec
 import graft.replicators.Replicators
 import graft.sources.WebhookAuth
-import java.net.URI
+import java.net.{Socket, URI}
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
+import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.Files
 
 /** S1 end-to-end over REAL HTTP, matching `api/helpers.rb:167-255` +
@@ -176,6 +177,179 @@ class WebhookReceiverSpec extends SparkSpec {
         .json(landing.toString)
         .select("__ingest_seq").collect().map(_.getLong(0)).sorted
       assert(seqs.toSeq == (1L to 100L)) // unique, gapless, monotone
+    } finally started.close()
+  }
+
+  private val openRoute = Map("svi_open" -> WebhookReceiver.Route(
+    verify = (_, _) => WebhookAuth.Accepted))
+
+  /** A socket to the receiver whose reads give up after 10 s, so a reply or
+    * EOF that never comes fails the test instead of hanging it. */
+  private def socketTo(port: Int): Socket = {
+    val s = new Socket("127.0.0.1", port)
+    s.setSoTimeout(10000)
+    s
+  }
+
+  private def rawPost(s: Socket, opaqueId: String, body: String, extra: String = ""): Unit = {
+    val bytes = body.getBytes(UTF_8)
+    s.getOutputStream.write(
+      (s"POST /v1/service_integrations/$opaqueId HTTP/1.1\r\nHost: 127.0.0.1\r\n" +
+        s"Content-Length: ${bytes.length}\r\n$extra\r\n").getBytes(UTF_8) ++ bytes)
+    s.getOutputStream.flush()
+  }
+
+  /** The reply's status line and headers, read up to the blank line. */
+  private def readHead(s: Socket): String = {
+    val b = new java.io.ByteArrayOutputStream
+    while (!b.toString(UTF_8).endsWith("\r\n\r\n")) {
+      val c = s.getInputStream.read()
+      assert(c >= 0, s"EOF inside the reply head: ${b.toString(UTF_8)}")
+      b.write(c)
+    }
+    b.toString(UTF_8)
+  }
+
+  private def contentLength(head: String): Int =
+    head.split("\r\n").collectFirst {
+      case h if h.toLowerCase(java.util.Locale.ROOT).startsWith("content-length:") =>
+        h.drop("content-length:".length).trim.toInt
+    }.get
+
+  test("back-to-back POSTs on one keep-alive connection are answered without a delayed-ACK stall") {
+    val dir = Files.createTempDirectory("whhttp-b2b")
+    val started = WebhookReceiver.start(openRoute, dir.resolve("landing"), dir.resolve("a.jsonl"))
+    try {
+      // HTTP/1.1 pins the client to one pooled connection for sequential sends
+      val client = HttpClient.newBuilder().version(HttpClient.Version.HTTP_1_1).build()
+      val url = started.url("svi_open")
+      (1 to 5).foreach(i => post(client, url, s"""{"warm":$i}"""))
+      val ms = (1 to 30).map { i =>
+        val t0 = System.nanoTime()
+        assert(post(client, url, s"""{"i":$i}""").statusCode() == 202)
+        (System.nanoTime() - t0) / 1e6
+      }.sorted
+      // a reply written as headers then body on a Nagle socket waits ~40 ms
+      // for the client's delayed ACK of the headers
+      assert(ms(ms.size / 2) < 20.0, s"reply ms: ${ms.mkString(", ")}")
+      assert(landed(dir.resolve("landing")) == 35)
+    } finally started.close()
+  }
+
+  test("a chunked request body lands byte-identical and passes signature verification") {
+    val dir = Files.createTempDirectory("whhttp-chunked")
+    val landing = dir.resolve("landing")
+    val now = 1700000000L
+    val routes = Map("svi_stripe_x" -> WebhookReceiver.Route(
+      verify = (headers, body) => WebhookAuth.verifySignedHeader(
+        headers.get("stripe-signature"), body, secret, nowEpoch = now)))
+    val started = WebhookReceiver.start(routes, landing, dir.resolve("a.jsonl"))
+    try {
+      // ~200 KB with multi-byte characters, sent with no Content-Length
+      val body = event(charge("ch_\u00e9\u4e2d", 7, 1000), 1000)
+        .replace("\"status\":\"ok\"", "\"status\":\"ok\",\"note\":\"" +
+          "caf\u00e9 \u4e2d\u6587 " * 20000 + "\"")
+      val bytes = body.getBytes(UTF_8)
+      val client = HttpClient.newBuilder().version(HttpClient.Version.HTTP_1_1).build()
+      val req = HttpRequest.newBuilder(URI.create(started.url("svi_stripe_x")))
+        .header("Stripe-Signature", signed(body, now))
+        .POST(HttpRequest.BodyPublishers.ofInputStream(() => new java.io.ByteArrayInputStream(bytes)))
+        .build()
+      val res = client.send(req, HttpResponse.BodyHandlers.ofString())
+      assert(res.statusCode() == 202, res.body())
+      assert(landed(landing) == 1)
+      val got = spark.read.schema(WebhookStream.requestSchema).json(landing.toString)
+        .select("body").collect().map(_.getString(0))
+      assert(got.length == 1 && got(0).getBytes(UTF_8).sameElements(bytes))
+    } finally started.close()
+  }
+
+  test("a Connection: close request gets its reply and then EOF") {
+    val dir = Files.createTempDirectory("whhttp-close")
+    val started = WebhookReceiver.start(openRoute, dir.resolve("landing"), dir.resolve("a.jsonl"))
+    try {
+      val s = socketTo(started.port)
+      try {
+        rawPost(s, "svi_open", """{"i":1}""", "Connection: close\r\n")
+        val head = readHead(s)
+        assert(head.startsWith("HTTP/1.1 202"), head)
+        // the whole body, then EOF: readAllBytes returns only at EOF (a
+        // connection left open fails on the read timeout)
+        val rest = s.getInputStream.readAllBytes()
+        assert(new String(rest, UTF_8) == """{"o":"k"}""")
+        assert(rest.length == contentLength(head))
+      } finally s.close()
+      assert(landed(dir.resolve("landing")) == 1)
+    } finally started.close()
+  }
+
+  test("close() closes open keep-alive connections, frees the port and stops its thread") {
+    val dir = Files.createTempDirectory("whhttp-stop")
+    val started = WebhookReceiver.start(openRoute, dir.resolve("landing"), dir.resolve("a.jsonl"))
+    val s = socketTo(started.port)
+    try {
+      rawPost(s, "svi_open", """{"i":1}""")
+      val head = readHead(s)
+      assert(head.startsWith("HTTP/1.1 202"), head)
+      s.getInputStream.readNBytes(contentLength(head))
+      import scala.jdk.CollectionConverters._
+      def loopThreads = Thread.getAllStackTraces.keySet.asScala.toSeq
+        .filter(_.getName.startsWith(WebhookReceiver.ThreadPrefix))
+      val threads = loopThreads
+      assert(threads.nonEmpty)
+      started.close()
+      assert(s.getInputStream.read() == -1) // the idle keep-alive connection was closed
+      new java.net.ServerSocket(started.port, 1,
+        java.net.InetAddress.getByName("127.0.0.1")).close()
+      threads.foreach(_.join(10000L))
+      assert(loopThreads.isEmpty, loopThreads.map(_.getName).mkString(", "))
+    } finally { s.close(); started.close() }
+  }
+
+  test("an oversize body is answered 413, audited once with an empty body and never landed") {
+    val dir = Files.createTempDirectory("whhttp-413")
+    val landing = dir.resolve("landing")
+    val audit = dir.resolve("a.jsonl")
+    val started = WebhookReceiver.start(openRoute, landing, audit)
+    try {
+      val client = HttpClient.newBuilder().version(HttpClient.Version.HTTP_1_1).build()
+      assert(post(client, started.url("svi_open"), """{"i":1}""").statusCode() == 202)
+      val hwm = Files.readString(landing.resolve("_seq_hwm"))
+      val s = socketTo(started.port)
+      try {
+        // the head announces one byte over the bound; no body byte follows
+        s.getOutputStream.write(("POST /v1/service_integrations/svi_open HTTP/1.1\r\n" +
+          "Host: 127.0.0.1\r\nX-Probe: big\r\n" +
+          s"Content-Length: ${WebhookReceiver.MaxBodyBytes + 1}\r\n\r\n").getBytes(UTF_8))
+        s.getOutputStream.flush()
+        val head = readHead(s)
+        assert(head.startsWith("HTTP/1.1 413"), head)
+      } finally s.close()
+      assert(landed(landing) == 1)
+      assert(Files.readString(landing.resolve("_seq_hwm")) == hwm)
+      val rows = spark.read.json(audit.toString)
+        .selectExpr("status", "body", "headers['x-probe']").collect()
+        .map(r => (r.getLong(0), r.getString(1), r.getString(2))).sortBy(_._1)
+      assert(rows.toSeq == Seq((202L, """{"i":1}""", null), (413L, "", "big")))
+    } finally started.close()
+  }
+
+  test("a request the codec cannot parse is answered 400 and closed, never audited or landed") {
+    val dir = Files.createTempDirectory("whhttp-400")
+    val audit = dir.resolve("a.jsonl")
+    val started = WebhookReceiver.start(openRoute, dir.resolve("landing"), audit)
+    try {
+      val s = socketTo(started.port)
+      try {
+        // a header block past the codec's 8 KiB bound
+        rawPost(s, "svi_open", """{"i":1}""", s"X-Pad: ${"p" * 9000}\r\n")
+        val head = readHead(s)
+        assert(head.startsWith("HTTP/1.1 400"), head)
+        s.getInputStream.readNBytes(contentLength(head))
+        assert(s.getInputStream.read() == -1)
+      } finally s.close()
+      assert(landed(dir.resolve("landing")) == 0)
+      assert(!Files.exists(audit))
     } finally started.close()
   }
 }
