@@ -169,8 +169,19 @@ object Converters {
     * JSON-escaped backslash-u0000 sequence are stripped from the JSON —
     * webhook JSON text carries NULs in escaped form — while `\\u0000`
     * (escaped backslash + literal text, not a NUL) is preserved. The
-    * backslash-pair capture keeps any even run of preceding backslashes. */
+    * backslash-pair capture keeps any even run of preceding backslashes.
+    *
+    * Both regex passes run only on a value that holds the six-char escape
+    * or a raw NUL; any other value (null included) comes back unchanged,
+    * which is what the passes would return for it. Almost no payload holds
+    * either, and the passes' lookbehind was a quarter of a projection's
+    * samples. */
   def scrubJsonNulls(c: Column): Column =
+    when(c.contains("\\u0000") || c.contains("\u0000"), scrubJsonNullsAlways(c))
+      .otherwise(c)
+
+  /** The unguarded scrub: both regex passes over every value. */
+  private[functions] def scrubJsonNullsAlways(c: Column): Column =
     regexp_replace(
       regexp_replace(c, "(?<!\\\\)((?:\\\\\\\\)*)\\\\u0000", "$1"),
       "\\x00", "")

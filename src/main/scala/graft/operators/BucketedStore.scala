@@ -11,10 +11,11 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   */
 object BucketedStore {
 
-  /** Persist as a bucketed, sorted catalog table. */
+  /** Persist as a bucketed, sorted catalog table, in the replica layout
+    * ([[ParquetLayout.writer]]). */
   def writeBucketed(df: DataFrame, table: String, keyCol: String,
                     buckets: Int): Unit =
-    df.write.mode(SaveMode.Overwrite)
+    ParquetLayout.writer(df).mode(SaveMode.Overwrite)
       .bucketBy(buckets, keyCol)
       .sortBy(keyCol)
       .format("parquet")

@@ -1,9 +1,38 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, DataFrameWriter, Row, SparkSession}
 
-/** Parquet physical-layout knobs for point-lookup-heavy replica tables:
-  * bloom filters + bounded row groups.
+/** The on-disk layout of every replica table: the one place that decides
+  * how a table the read-only SQL surface and the sync read is written.
+  * [[writer]] applies it to [[PartitionedStore]] (write, merge, compact),
+  * `SnapshotStore`, [[BucketedStore]], [[writeWithBloom]] and
+  * `ResultCache`.
+  *
+  *  - Every file is written with zstd. A replica row's largest column is
+  *    the provider's full JSON payload (`data`), and zstd stores it in
+  *    less than half of snappy's bytes (a backfilled 10k-row table: `data`
+  *    52.7 -> 24.4 B/row, the whole table 126.7 -> 77.3 B/row; SCALE.md
+  *    "Storage layout").
+  *  - The JSON payload columns ([[PayloadCols]]) are written without a
+  *    dictionary. Every row's payload is unique, so parquet would build a
+  *    dictionary for each page only to find it no smaller and fall back to
+  *    plain; skipping that attempt gives the same bytes and pays for
+  *    zstd's extra compression time on the write path. Every other column
+  *    (`status`, keys, timestamps) keeps its dictionary.
+  *
+  * The layout travels with each write as write options, not as session
+  * conf, so a write in any session (an embedding application's own
+  * included) gets it. Readers need nothing: parquet records the codec per
+  * column chunk, so a table whose older epochs are snappy reads, merges,
+  * time-travels and diffs as before, and its next rewrite of a bucket is
+  * zstd.
+  *
+  * Operator-internal state (`KeyedStore`, `BatchStore`, `InvIndex`, the
+  * substring and split ledgers, the band, IVF and dedup stores) and the
+  * outbound export pages keep Spark's default writer.
+  *
+  * On top of that layout, [[writeWithBloom]] adds the knobs of
+  * point-lookup-heavy tables: bloom filters + bounded row groups.
   *
   * Row-group min/max statistics prune range predicates on SORTED columns
   * (what [[ZOrder]] and [[BucketedStore]] arrange). They cannot prune
@@ -26,9 +55,24 @@ object ParquetLayout {
 
   val DefaultRowGroupBytes: Long = 1L << 20
 
-  /** Write `df` with bloom filters on `bloomCols` and `rowGroupBytes`-sized
-    * row groups. Options are parquet-mr's own (`parquet.bloom.filter.
-    * enabled#<col>`), applied per column so non-keyed columns pay nothing.
+  /** The codec of every replica-table file. */
+  val Codec = "zstd"
+
+  /** The replicator's JSON payload columns, written without a dictionary
+    * where a table stores them. */
+  val PayloadCols: Seq[String] = Seq("data", "enrichment")
+
+  /** A writer for `df` with the replica-table layout applied. */
+  def writer(df: DataFrame): DataFrameWriter[Row] = {
+    val noDictionary = PayloadCols.filter(df.columns.contains)
+      .map(c => s"parquet.enable.dictionary#$c" -> "false")
+    df.write.option("compression", Codec).options(noDictionary.toMap)
+  }
+
+  /** Write `df` in the replica layout ([[writer]]) with bloom filters on
+    * `bloomCols` and `rowGroupBytes`-sized row groups. Options are
+    * parquet-mr's own (`parquet.bloom.filter.enabled#<col>`), applied per
+    * column so non-keyed columns pay nothing.
     *
     * `expectedDistinct` is the distinct count PER ROW GROUP (each group
     * gets its own filter) — sizing it at the table's global cardinality
@@ -47,7 +91,7 @@ object ParquetLayout {
   def writeWithBloom(df: DataFrame, dir: String, bloomCols: Seq[String],
                      rowGroupBytes: Long = DefaultRowGroupBytes,
                      expectedDistinct: Long = 100000L): Unit = {
-    var w = df.write.mode("overwrite")
+    var w = writer(df).mode("overwrite")
       .option("parquet.block.size", rowGroupBytes.toString)
     bloomCols.foreach { c =>
       w = w.option(s"parquet.bloom.filter.enabled#$c", "true")

@@ -39,6 +39,14 @@ import scala.jdk.CollectionConverters._
   * written before it was recorded have no `schema`; their reads take it
   * from one data file's footer instead.
   *
+  * Every epoch is written in the replica layout of [[ParquetLayout]]:
+  * zstd, with the JSON payload (`data`, and `enrichment` where a spec
+  * stores it) written without a dictionary, because each row's payload is
+  * unique and a dictionary page would only be built and thrown away. The
+  * layout is per file, so epochs written before it (snappy) stay readable
+  * next to zstd ones: a merge rewrites only its touched buckets in zstd,
+  * and a compaction rewrites them all.
+  *
   * Every read — [[read]], [[readAt]], [[diff]], and the reads inside
   * [[mergeInto]] and [[compact]] — is ONE parquet relation over a
   * [[ManifestIndex]]: the requested buckets' files, each listed under the
@@ -207,7 +215,7 @@ object PartitionedStore {
   private def writeLocked(df: DataFrame, dir: String, keyCol: String, buckets: Int): Unit = {
     val v = currentManifest(dir).map(_.version + 1).getOrElse(1L)
     val b = withBucket(df, keyCol, buckets)
-    b.write.mode("overwrite").partitionBy(BucketCol).parquet(s"$dir/e$v")
+    ParquetLayout.writer(b).mode("overwrite").partitionBy(BucketCol).parquet(s"$dir/e$v")
     // a snapshot of zero rows lands no bucket at all: the manifest's schema
     // is what its reads answer with
     val landed = bucketsIn(Paths.get(dir, s"e$v"))
@@ -314,7 +322,7 @@ object PartitionedStore {
     val merged = Merge.upsert(
       current.select(bucketed.columns.map(col): _*), bucketed, mergeSpec)
     val v = m.version + 1
-    merged.write.mode("overwrite").partitionBy(BucketCol).parquet(s"$dir/e$v")
+    ParquetLayout.writer(merged).mode("overwrite").partitionBy(BucketCol).parquet(s"$dir/e$v")
     val landed = bucketsIn(Paths.get(dir, s"e$v"))
     publish(dir, Manifest(v, m.buckets ++ landed.map(_ -> v), Some(storedSchema(current))))
   }
@@ -337,7 +345,7 @@ object PartitionedStore {
     if (m.epochDirs.size <= 1) return
     val v = m.version + 1
     val live = readManifest(spark, dir, m)
-    live.write.mode("overwrite").partitionBy(BucketCol).parquet(s"$dir/e$v")
+    ParquetLayout.writer(live).mode("overwrite").partitionBy(BucketCol).parquet(s"$dir/e$v")
     publish(dir, Manifest(v, bucketsIn(Paths.get(dir, s"e$v")).map(_ -> v).toMap,
       Some(storedSchema(live))))
   }

@@ -1,6 +1,6 @@
 package graft.plans
 
-import graft.operators.TableLock
+import graft.operators.{ParquetLayout, TableLock}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.LeafNode
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
@@ -68,7 +68,7 @@ final class ResultCache(spark: SparkSession, cacheDir: String) {
     } else {
       misses.incrementAndGet()
       val tmp = Paths.get(cacheDir, s".tmp-$key-${java.util.UUID.randomUUID()}")
-      df.write.mode("overwrite").parquet(tmp.toString)
+      ParquetLayout.writer(df).mode("overwrite").parquet(tmp.toString)
       TableLock.withLock(cacheDir) {
         if (Files.isDirectory(target)) {
           // another writer published the same key first: identical bytes

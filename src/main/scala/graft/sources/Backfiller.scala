@@ -62,10 +62,17 @@ object Backfiller {
   }
 
   /** Items -> distributed webhook batch with a deterministic ingest order
-    * (page arrival order drives last-wins dedup, U4). */
+    * (page arrival order drives last-wins dedup, U4).
+    *
+    * The rows are sliced over `defaultParallelism` partitions rather than
+    * held as a local relation: Spark's optimizer folds the first projection
+    * over a local relation into the plan (`ConvertToLocalRelation`), so the
+    * projection's JSON digs of every item would run on the driver,
+    * interpreted and single-threaded, inside query planning. */
   def toWebhookDf(spark: SparkSession, items: Seq[String]): DataFrame = {
     import spark.implicits._
-    items.zipWithIndex.map { case (b, i) => (b, i.toLong) }
+    val rows = items.zipWithIndex.map { case (b, i) => (b, i.toLong) }
+    spark.sparkContext.parallelize(rows, spark.sparkContext.defaultParallelism)
       .toDF("body", Projection.IngestSeqCol)
   }
 

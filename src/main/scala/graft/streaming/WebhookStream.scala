@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.operators.{Pipeline, Projection, ReplicatorSpec}
+import graft.operators.{ParquetLayout, Pipeline, Projection, ReplicatorSpec}
 import org.apache.spark.sql.{DataFrame, GraftColumnBridge, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
@@ -169,7 +169,7 @@ final class SnapshotStore(dir: String, retain: Int = 2,
     // microbatch and any other writer on this snapshot dir take turns
     graft.operators.TableLock.withLock(dir) {
       val v = s"v$batchId"
-      df.write.mode("overwrite").parquet(s"$dir/$v")
+      ParquetLayout.writer(df).mode("overwrite").parquet(s"$dir/$v")
       // write-then-rename: a reader (or a crash) never sees a truncated
       // pointer, only the previous version or this one
       val tmp = Paths.get(dir, ".LATEST.tmp")

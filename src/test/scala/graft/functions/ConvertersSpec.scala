@@ -100,6 +100,30 @@ class ConvertersSpec extends SparkSpec {
     assert(one(Converters.scrubJsonNulls(lit("a\\\\\\u0000b"))) == "a\\\\b")
   }
 
+  test("NUL scrub: the guarded form equals both regex passes on every input") {
+    val nul = "\u0000"
+    val esc = "\\" + "u0000" // the six-char escape
+    // 0-5 backslashes before u0000, raw NULs, both, and neither
+    val escapes = (0 to 5).map(n => "\\" * n + "u0000")
+    val fixed = escapes ++ escapes.map(_ + nul) ++ escapes.map(nul + _) ++
+      Seq(nul, nul * 2, "", "plain", """{"a":"b"}""", "\\u0041", "u0000", "\\\\") ++
+      escapes.flatMap(e => Seq(s"""{"k":"x${e}y"}""", e + e, s"a${e}b${nul}c"))
+    val rnd = new scala.util.Random(7)
+    val tokens = Seq("a", "\\", "u", "0", "u0000", esc, nul, "\"", "{")
+    val generated = Seq.fill(2000)(Seq.fill(rnd.nextInt(9))(tokens(rnd.nextInt(tokens.size))).mkString)
+    val inputs = (fixed ++ generated).map(Option(_)) :+ None
+    val df = inputs.toDF("s")
+    val differing = df
+      .select(col("s"), Converters.scrubJsonNulls(col("s")).as("guarded"),
+        Converters.scrubJsonNullsAlways(col("s")).as("always"))
+      .where(!(col("guarded") <=> col("always")))
+      .collect()
+    assert(differing.isEmpty, differing.take(5).mkString("; "))
+    // both branches ran: some inputs change, others pass through
+    val changed = df.where(!(Converters.scrubJsonNulls(col("s")) <=> col("s"))).count()
+    assert(changed > 0 && changed < inputs.size)
+  }
+
   test("E19 uuid7 is well-formed and time-ordered") {
     val early = Converters.uuid7At(lit("2024-01-01 00:00:00").cast(TimestampType))
     val late = Converters.uuid7At(lit("2024-06-01 00:00:00").cast(TimestampType))

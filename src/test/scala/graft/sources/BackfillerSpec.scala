@@ -1,8 +1,9 @@
 package graft.sources
 
 import graft.SparkSpec
-import graft.operators.Pipeline
+import graft.operators.{Pipeline, Projection}
 import graft.replicators.Replicators
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 
 /** S2-S4 contract ("can backfill", "ignores HTTP errors during backfill"):
   * token pagination, per-page retry, 401 abort, incremental watermarks. */
@@ -25,6 +26,27 @@ class BackfillerSpec extends SparkSpec {
     val spec = Replicators.stripeChargeV1
     val merged = Pipeline.upsertBatch(spec, Pipeline.emptyTarget(spec, spark), df)
     assert(merged.count() == 4)
+  }
+
+  test("the backfill frame stays distributed: no projection runs in the planner") {
+    import spark.implicits._
+    val items = (0 until 300).map(i => item(s"ch_${i % 250}", i)) :+ "not json"
+    val spec = Replicators.stripeChargeV1Partitioned
+    val projected = Projection.project(spec, Backfiller.toWebhookDf(spark, items))
+    // over a local relation, ConvertToLocalRelation evaluates the first
+    // projection (the __resource/__event digs) on the driver while optimizing
+    val leaves = projected.queryExecution.optimizedPlan.collectLeaves()
+    assert(!leaves.exists(_.isInstanceOf[LocalRelation]), leaves.mkString("; "))
+    assert(Backfiller.toWebhookDf(spark, items).rdd.getNumPartitions ==
+      spark.sparkContext.defaultParallelism)
+    // the same rows as the local-relation frame, ingest numbering included
+    val local = items.zipWithIndex.map { case (b, i) => (b, i.toLong) }
+      .toDF("body", Projection.IngestSeqCol)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.toSeq.mkString("|")).sorted.toSeq
+    assert(Backfiller.toWebhookDf(spark, items).schema == local.schema)
+    assert(rows(projected) == rows(Projection.project(spec, local)))
+    assert(rows(projected).size == 300)
   }
 
   test("retries flaky pages up to maxAttempts with backoff") {
