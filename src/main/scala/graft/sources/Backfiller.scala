@@ -64,16 +64,20 @@ object Backfiller {
   /** Items -> distributed webhook batch with a deterministic ingest order
     * (page arrival order drives last-wins dedup, U4).
     *
-    * The rows are sliced over `defaultParallelism` partitions rather than
-    * held as a local relation: Spark's optimizer folds the first projection
-    * over a local relation into the plan (`ConvertToLocalRelation`), so the
-    * projection's JSON digs of every item would run on the driver,
-    * interpreted and single-threaded, inside query planning. */
+    * The rows are sliced over up to `defaultParallelism` partitions, no
+    * more than one per item, rather than held as a local relation: Spark's
+    * optimizer folds the first projection over a local relation into the
+    * plan (`ConvertToLocalRelation`), so the projection's JSON digs of
+    * every item would run on the driver, interpreted and single-threaded,
+    * inside query planning. An empty batch (a first-page 401, an
+    * incremental run with nothing new) stays local: it has no digs, and a
+    * distributed one would launch a task for nothing. */
   def toWebhookDf(spark: SparkSession, items: Seq[String]): DataFrame = {
     import spark.implicits._
     val rows = items.zipWithIndex.map { case (b, i) => (b, i.toLong) }
-    spark.sparkContext.parallelize(rows, spark.sparkContext.defaultParallelism)
-      .toDF("body", Projection.IngestSeqCol)
+    val slices = math.min(rows.size, spark.sparkContext.defaultParallelism)
+    if (rows.isEmpty) rows.toDF("body", Projection.IngestSeqCol)
+    else spark.sparkContext.parallelize(rows, slices).toDF("body", Projection.IngestSeqCol)
   }
 
   /** S12 — parallel backfill pool (`base.rb:1134-1166`): replicator-chosen

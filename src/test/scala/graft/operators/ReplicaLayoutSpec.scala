@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.SparkSpec
-import graft.plans.ResultCache
+import graft.plans.{OrgNamespace, ResultCache}
 import graft.streaming.SnapshotStore
 import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.parquet.hadoop.ParquetFileReader
@@ -112,6 +112,15 @@ class ReplicaLayoutSpec extends SparkSpec {
     cache.run(PartitionedStore.read(spark, t).select("k", "status", "data")).count()
     assert(codecs(parquetFiles(cdir.resolve("cache")).map(_.toString)) ==
       Set(CompressionCodecName.ZSTD))
+
+    // OrgNamespace.registerTable: the table the org's read-only SQL serves
+    try {
+      OrgNamespace.provision(spark, "layoutco")
+      OrgNamespace.registerTable(spark, "layoutco", "charges", table)
+      val ofiles = spark.table("org_layoutco.charges").inputFiles.toSeq
+      assert(codecs(ofiles) == Set(CompressionCodecName.ZSTD))
+      assert(dictionaryEncoded(ofiles, "data") == Set(false))
+    } finally OrgNamespace.drop(spark, "layoutco")
   }
 
   /** Commit the bucketed frame `b` as epoch `v` the way a pre-zstd writer

@@ -39,6 +39,12 @@ class BackfillerSpec extends SparkSpec {
     assert(!leaves.exists(_.isInstanceOf[LocalRelation]), leaves.mkString("; "))
     assert(Backfiller.toWebhookDf(spark, items).rdd.getNumPartitions ==
       spark.sparkContext.defaultParallelism)
+    // a small batch gets no empty slices; an empty one stays local
+    assert(Backfiller.toWebhookDf(spark, items.take(2)).rdd.getNumPartitions ==
+      math.min(2, spark.sparkContext.defaultParallelism))
+    val empty = Backfiller.toWebhookDf(spark, Nil)
+    assert(empty.queryExecution.optimizedPlan.isInstanceOf[LocalRelation])
+    assert(empty.count() == 0)
     // the same rows as the local-relation frame, ingest numbering included
     val local = items.zipWithIndex.map { case (b, i) => (b, i.toLong) }
       .toDF("body", Projection.IngestSeqCol)

@@ -7,15 +7,15 @@ Usage, from anywhere:
         --workloads backfill_sync,webhook_live --seeds 1-10 --out pairs.jsonl
 
 Each checkout runs its own `perfbench/run.py --workload W --seed N
---seconds S --trace 0`, so each builds into and writes under its own
+--seconds 10 --trace 0` (the benchmark's run length), so each builds into and writes under its own
 `.bench_build/`. For every seed, in the order given, and every workload,
 the two sides run one after the other, one run at a time; the parent runs
 first on the 1st, 3rd, ... seed and second on the others. Every raw result
 line is appended to `--out` as one JSON object ({"side", "workload", "seed",
 "pair", "first", "rc", "result"}), so an interrupted run keeps what it ran.
 
-The summary reads the end-to-end metrics of BENCHMARK.json (of the change
-checkout, or `--benchmark`) and prints, per workload and metric, each
+The summary reads the end-to-end metrics of the change checkout's
+BENCHMARK.json and prints, per workload and metric, each
 side's median [q1-q3], in how many pairs the change was better (direction
 from the metric's `better`), whether the gap between medians exceeds the
 parent's interquartile range, and the relative change of the median against
@@ -40,9 +40,9 @@ def parse_seeds(spec):
     return seeds
 
 
-def run_one(checkout, workload, seed, seconds):
+def run_one(checkout, workload, seed):
     cmd = [sys.executable, "perfbench/run.py", "--workload", workload,
-           "--seed", str(seed), "--seconds", str(seconds), "--trace", "0"]
+           "--seed", str(seed), "--seconds", "10", "--trace", "0"]
     p = subprocess.run(cmd, cwd=checkout, capture_output=True, text=True)
     lines = [l for l in p.stdout.splitlines() if l.strip()]
     try:
@@ -108,27 +108,22 @@ def summarize(records, benchmark):
 def main():
     ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
     ap.add_argument("--parent", help="parent checkout dir")
-    ap.add_argument("--change", help="change checkout dir")
+    ap.add_argument("--change", required=True, help="change checkout dir")
     ap.add_argument("--workloads", default="backfill_sync,webhook_live")
     ap.add_argument("--seeds", default="1-10", help="e.g. 1-10 or 1-5,1-5")
-    ap.add_argument("--seconds", type=int, default=10)
     ap.add_argument("--out", help="JSONL file the raw result lines are appended to")
-    ap.add_argument("--benchmark", help="BENCHMARK.json to read (default: the change's)")
     ap.add_argument("--summarize", metavar="FILE", help="summarize an earlier --out file")
     a = ap.parse_args()
 
-    bench_path = a.benchmark or (os.path.join(a.change, "BENCHMARK.json") if a.change else None)
-    if not bench_path:
-        ap.error("--benchmark or --change is needed to read the metrics")
-    with open(bench_path) as fh:
+    with open(os.path.join(a.change, "BENCHMARK.json")) as fh:
         benchmark = json.load(fh)
 
     if a.summarize:
         with open(a.summarize) as fh:
             summarize([json.loads(l) for l in fh if l.strip()], benchmark)
         return
-    if not (a.parent and a.change and a.out):
-        ap.error("--parent, --change and --out are needed to run pairs")
+    if not (a.parent and a.out):
+        ap.error("--parent and --out are needed to run pairs")
     sides = {"parent": os.path.abspath(a.parent), "change": os.path.abspath(a.change)}
     records = []
     pair = 0
@@ -137,7 +132,7 @@ def main():
         for w in a.workloads.split(","):
             pair += 1
             for side in order:
-                rc, result = run_one(sides[side], w, seed, a.seconds)
+                rc, result = run_one(sides[side], w, seed)
                 rec = {"side": side, "workload": w, "seed": seed, "pair": pair,
                        "first": order[0], "rc": rc, "result": result}
                 records.append(rec)
